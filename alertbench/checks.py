@@ -106,3 +106,13 @@ def check_job_counts(tracker: dict[str, int], eventlog: dict[str, int]) -> list[
         for g, n in sorted(tracker.items())
         if n != eventlog.get(g, 0)
     ]
+
+
+def check_operations(ops: list[str], outputs: dict, failed: int) -> list[str]:
+    """Every operation of the workload left an output in the checked
+    pass, and none raised in any pass: an output that is missing was
+    checked against nothing."""
+    out = [f"{name}: no output to check (the operation raised)" for name in ops if name not in outputs]
+    if failed:
+        out.append(f"{failed} operation(s) raised during the run")
+    return out

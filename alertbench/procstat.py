@@ -14,6 +14,10 @@ import threading
 
 CLK_TCK = os.sysconf("SC_CLK_TCK")
 PAGE = os.sysconf("SC_PAGE_SIZE")
+# A child caught between fork and exec still shows its parent's whole
+# memory; processes younger than this are left out of the RSS sum.
+RSS_MIN_AGE_S = 1.0
+RSS_INTERVAL_S = 0.25
 
 
 def _stat_fields(pid: int) -> list[str] | None:
@@ -26,15 +30,14 @@ def _stat_fields(pid: int) -> list[str] | None:
     return raw[raw.rindex(")") + 2 :].split()
 
 
-def tree_pids(root: int | None = None) -> list[int]:
-    root = os.getpid() if root is None else root
+def tree_pids() -> list[int]:
     children: dict[int, list[int]] = {}
     for name in os.listdir("/proc"):
         if name.isdigit():
             f = _stat_fields(int(name))
             if f is not None:
                 children.setdefault(int(f[1]), []).append(int(name))
-    out, todo = [], [root]
+    out, todo = [], [os.getpid()]
     while todo:
         pid = todo.pop()
         out.append(pid)
@@ -42,10 +45,10 @@ def tree_pids(root: int | None = None) -> list[int]:
     return out
 
 
-def tree_cpu_s(root: int | None = None) -> float:
+def tree_cpu_s() -> float:
     """User + system CPU-seconds of the tree, exited children included."""
     ticks = 0
-    for pid in tree_pids(root):
+    for pid in tree_pids():
         f = _stat_fields(pid)
         if f is not None:
             # fields 14-17 of stat(5): utime stime cutime cstime
@@ -53,16 +56,14 @@ def tree_cpu_s(root: int | None = None) -> float:
     return ticks / CLK_TCK
 
 
-def tree_rss_mb(root: int | None = None, min_age_s: float = 1.0) -> float:
-    """Summed RSS of the tree's processes older than ``min_age_s``. A
-    child caught between fork and exec still shows its parent's whole
-    memory; leaving out the newest processes keeps it from counting twice."""
+def tree_rss_mb() -> float:
+    """Summed RSS of the tree's processes older than RSS_MIN_AGE_S."""
     with open("/proc/uptime") as f:
         uptime = float(f.read().split()[0])
     pages = 0
-    for pid in tree_pids(root):
+    for pid in tree_pids():
         f = _stat_fields(pid)
-        if f is None or uptime - int(f[19]) / CLK_TCK < min_age_s:
+        if f is None or uptime - int(f[19]) / CLK_TCK < RSS_MIN_AGE_S:
             continue
         try:
             with open(f"/proc/{pid}/statm") as m:
@@ -79,20 +80,19 @@ def steal_s() -> float:
     return int(cpu[8]) / CLK_TCK
 
 
-def process_start_epoch(pid: int | None = None) -> float:
-    """Wall-clock start of a process, from its stat starttime and btime."""
-    f = _stat_fields(os.getpid() if pid is None else pid)
+def process_start_epoch() -> float:
+    """Wall-clock start of this process, from its stat starttime and btime."""
+    f = _stat_fields(os.getpid())
     with open("/proc/stat") as s:
         btime = next(int(line.split()[1]) for line in s if line.startswith("btime"))
     return btime + int(f[19]) / CLK_TCK
 
 
 class RssSampler:
-    """Background sampler of the tree's summed RSS; ``peak_mb`` is the
-    largest sample seen. Use as a context manager."""
+    """Background sampler of the tree's summed RSS, every RSS_INTERVAL_S;
+    ``peak_mb`` is the largest sample seen. Use as a context manager."""
 
-    def __init__(self, interval_s: float = 0.25):
-        self.interval_s = interval_s
+    def __init__(self):
         self.peak_mb = 0.0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
@@ -100,7 +100,7 @@ class RssSampler:
     def _run(self) -> None:
         while not self._stop.is_set():
             self.sample()
-            self._stop.wait(self.interval_s)
+            self._stop.wait(RSS_INTERVAL_S)
 
     def sample(self) -> None:
         self.peak_mb = max(self.peak_mb, tree_rss_mb())

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import os
 import sys
+from unittest import mock
 
 import numpy as np
 import pytest
@@ -18,6 +19,7 @@ sys.path[:0] = [HERE, os.path.dirname(HERE)]
 
 import checks  # noqa: E402
 import kernels  # noqa: E402
+import run  # noqa: E402
 
 COLS = ["user_id", "score", "tags"]
 ROWS = [(1, 0.25, ["a", "b"]), (2, 0.5, []), (3, None, ["c"])]
@@ -73,6 +75,26 @@ def test_t2_rejects_class_out_of_range():
 
 def test_t2_rejects_wrong_cohort_size():
     assert checks.check_t2(_t2_rows(), 4)
+
+
+def _boom(spark, data_dir):
+    raise RuntimeError("operation failed")
+
+
+def test_a_raising_operation_fails_the_run():
+    ok = lambda spark, data_dir: mock.MagicMock()  # noqa: E731
+    runner = run.Runner(None, {"ok": ok, "boom": _boom}, "unused")
+    rec = runner.run_pass(0, ["ok", "boom"])
+    assert (runner.attempted, runner.failed) == (2, 1)
+    assert set(rec["outputs"]) == {"ok"}
+    problems = checks.check_operations(["ok", "boom"], rec["outputs"], runner.failed)
+    assert any(p.startswith("boom:") for p in problems)
+    assert checks.check_operations(["ok"], rec["outputs"], 0) == []
+
+
+def test_counted_passes_do_not_depend_on_speed():
+    assert run.counted_passes(0.1) == run.MIN_COUNTED
+    assert run.counted_passes(10 * run.REF_PASS_S) == 10
 
 
 def test_stream_inputs_conserved():

@@ -13,6 +13,7 @@ import time
 from collections import Counter, defaultdict
 from datetime import datetime
 
+from py4j.clientserver import ClientServer, ClientServerConnection
 from pyspark.sql.streaming import StreamingQueryListener
 
 STREAM_PHASES = (
@@ -24,6 +25,8 @@ STREAM_PHASES = (
     "latestOffset",
     "getBatch",
 )
+SETTLE_QUIET_S = 1.0
+SETTLE_LIMIT_S = 15.0
 
 
 class Spans:
@@ -47,31 +50,31 @@ class Spans:
 
 class Py4jCounter:
     """Counts JVM round trips made from the calling thread (listener
-    callbacks on other threads do not count)."""
+    callbacks on other threads do not count). PySpark pins threads by
+    default, so its gateway is a py4j ``ClientServer`` and every call
+    goes through ``ClientServerConnection.send_command``."""
 
     def __init__(self):
         self.calls = 0
         self._thread = threading.get_ident()
-        self._patched: list[tuple[type, object]] = []
+        self._orig = ClientServerConnection.send_command
 
     def install(self) -> None:
-        from py4j import clientserver, java_gateway
+        from pyspark import SparkContext
 
-        for cls in (clientserver.ClientServerConnection, java_gateway.GatewayConnection):
-            orig = cls.send_command
+        if not isinstance(SparkContext._gateway, ClientServer):
+            raise RuntimeError("py4j gateway is not a ClientServer (PYSPARK_PIN_THREAD=false?)")
+        orig = self._orig
 
-            def send_command(conn, command, *a, _orig=orig, **kw):
-                if threading.get_ident() == self._thread:
-                    self.calls += 1
-                return _orig(conn, command, *a, **kw)
+        def send_command(conn, command, *a, **kw):
+            if threading.get_ident() == self._thread:
+                self.calls += 1
+            return orig(conn, command, *a, **kw)
 
-            cls.send_command = send_command
-            self._patched.append((cls, orig))
+        ClientServerConnection.send_command = send_command
 
     def uninstall(self) -> None:
-        for cls, orig in self._patched:
-            cls.send_command = orig
-        self._patched.clear()
+        ClientServerConnection.send_command = self._orig
 
 
 def _epoch(iso: str) -> float:
@@ -109,10 +112,11 @@ class ProgressRecorder(StreamingQueryListener):
     def onQueryTerminated(self, event):
         pass
 
-    def settle(self, quiet_s: float = 1.0, limit_s: float = 15.0) -> None:
-        """Wait until no progress event arrived for ``quiet_s``: the
-        listener bus delivers them asynchronously."""
-        deadline = time.time() + limit_s
+    def settle(self) -> None:
+        """Wait until no progress event arrived for SETTLE_QUIET_S (at
+        most SETTLE_LIMIT_S): the listener bus delivers them
+        asynchronously."""
+        deadline = time.time() + SETTLE_LIMIT_S
         seen = -1
         while time.time() < deadline:
             with self._lock:
@@ -120,7 +124,7 @@ class ProgressRecorder(StreamingQueryListener):
             if n == seen:
                 return
             seen = n
-            time.sleep(quiet_s)
+            time.sleep(SETTLE_QUIET_S)
 
 
 def read_eventlog(log_dir: str) -> list[dict]:
