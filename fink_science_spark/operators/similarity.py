@@ -636,6 +636,20 @@ def lsh_bucket(vec: Column, dim: int, nbits: int = 8) -> Column:
     return out
 
 
+def lsh_bucket_sql(vec: str, nbits: int, dim: int) -> str:
+    """The DuckDB SQL twin of :func:`lsh_bucket` over the ``DOUBLE[]``
+    column ``vec``, for oracles: the same hyperplane literals, the same
+    bit packing."""
+    bits = []
+    for j in range(nbits):
+        terms = " + ".join(
+            f"{vec}[{d + 1}] * ({hyperplane_component(j, d)!r})"
+            for d in range(dim)
+        )
+        bits.append(f"(CASE WHEN ({terms}) > 0 THEN (1::BIGINT << {j}) ELSE 0 END)")
+    return "(" + " | ".join(bits) + ")"
+
+
 def lsh_bucketed_topk(
     corpus: DataFrame,
     queries: DataFrame,

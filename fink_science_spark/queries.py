@@ -16,7 +16,6 @@ oracle engine's timestamp type (``epoch_us(ts)``).
 from __future__ import annotations
 
 import os
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,6 +34,7 @@ from fink_science_spark.operators.aggregates import (
     weighted_quantile,
 )
 from fink_science_spark.operators.dedup import argmin_dedup
+from fink_science_spark.registry import register
 
 WEEK_US = 7 * 24 * 3600 * 1_000_000
 DAY_US = 24 * 3600 * 1_000_000
@@ -725,46 +725,30 @@ GROUP BY 1, 2
 """
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "pricing_summary": q_pricing_summary,
-    "top_revenue_orders": q_top_revenue_orders,
-    "region_revenue": q_region_revenue,
-    "order_flags": q_order_flags,
-    "cheapest_order_per_customer": q_cheapest_order_per_customer,
-    "customers_without_orders": q_customers_without_orders,
-    "returned_orders_by_priority": q_returned_orders_by_priority,
-    "lineitem_topk": q_lineitem_topk,
-    "supplier_upsert": q_supplier_upsert,
-    "events_json_stats": q_events_json_stats,
-    "user_history_stats": q_user_history_stats,
-    "history_lookback": q_history_lookback,
-    "history_window_counts": q_history_window_counts,
-    "exists_flag": q_exists_flag,
-    "band_peaks": q_band_peaks,
-    "event_type_stats": q_event_type_stats,
-    "weighted_median": q_weighted_median,
-    "trailing_mean": q_trailing_mean,
-    "weekly_counts": q_weekly_counts,
-}
-
-ORACLES: dict[str, str] = {
-    "pricing_summary": ORACLE_PRICING_SUMMARY,
-    "top_revenue_orders": ORACLE_TOP_REVENUE_ORDERS,
-    "region_revenue": ORACLE_REGION_REVENUE,
-    "order_flags": ORACLE_ORDER_FLAGS,
-    "cheapest_order_per_customer": ORACLE_CHEAPEST_ORDER,
-    "customers_without_orders": ORACLE_CUSTOMERS_WITHOUT_ORDERS,
-    "returned_orders_by_priority": ORACLE_RETURNED_ORDERS,
-    "lineitem_topk": ORACLE_LINEITEM_TOPK,
-    "supplier_upsert": ORACLE_SUPPLIER_UPSERT,
-    "events_json_stats": ORACLE_EVENTS_JSON_STATS,
-    "user_history_stats": ORACLE_USER_HISTORY_STATS,
-    "history_lookback": ORACLE_HISTORY_LOOKBACK,
-    "history_window_counts": ORACLE_HISTORY_WINDOW_COUNTS,
-    "exists_flag": ORACLE_EXISTS_FLAG,
-    "band_peaks": ORACLE_BAND_PEAKS,
-    "event_type_stats": ORACLE_EVENT_TYPE_STATS,
-    "weighted_median": ORACLE_WEIGHTED_MEDIAN,
-    "trailing_mean": ORACLE_TRAILING_MEAN,
-    "weekly_counts": ORACLE_WEEKLY_COUNTS,
-}
+register("pricing_summary", q_pricing_summary, ORACLE_PRICING_SUMMARY)
+register("top_revenue_orders", q_top_revenue_orders, ORACLE_TOP_REVENUE_ORDERS)
+register("region_revenue", q_region_revenue, ORACLE_REGION_REVENUE)
+register("order_flags", q_order_flags, ORACLE_ORDER_FLAGS, bench=False)
+register("cheapest_order_per_customer", q_cheapest_order_per_customer,
+         ORACLE_CHEAPEST_ORDER)
+register("customers_without_orders", q_customers_without_orders,
+         ORACLE_CUSTOMERS_WITHOUT_ORDERS, bench=False)
+register("returned_orders_by_priority", q_returned_orders_by_priority,
+         ORACLE_RETURNED_ORDERS, bench=False)
+register("lineitem_topk", q_lineitem_topk, ORACLE_LINEITEM_TOPK, bench=False)
+register("supplier_upsert", q_supplier_upsert, ORACLE_SUPPLIER_UPSERT,
+         bench=False)
+register("events_json_stats", q_events_json_stats, ORACLE_EVENTS_JSON_STATS,
+         bench=False)
+register("user_history_stats", q_user_history_stats, ORACLE_USER_HISTORY_STATS)
+register("history_lookback", q_history_lookback, ORACLE_HISTORY_LOOKBACK,
+         bench=False)
+register("history_window_counts", q_history_window_counts,
+         ORACLE_HISTORY_WINDOW_COUNTS, bench=False)
+register("exists_flag", q_exists_flag, ORACLE_EXISTS_FLAG, bench=False)
+register("band_peaks", q_band_peaks, ORACLE_BAND_PEAKS, bench=False)
+register("event_type_stats", q_event_type_stats, ORACLE_EVENT_TYPE_STATS)
+register("weighted_median", q_weighted_median, ORACLE_WEIGHTED_MEDIAN,
+         bench=False)
+register("trailing_mean", q_trailing_mean, ORACLE_TRAILING_MEAN)
+register("weekly_counts", q_weekly_counts, ORACLE_WEEKLY_COUNTS)

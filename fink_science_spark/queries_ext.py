@@ -8,7 +8,6 @@ kernel is genuinely non-SQL, e.g. seeded Monte-Carlo).
 from __future__ import annotations
 
 import uuid
-from typing import Callable
 
 import pandas as pd
 
@@ -44,13 +43,14 @@ from fink_science_spark.operators.enrich import apply_masked_pandas_kernel
 from fink_science_spark.operators.multimodal import extract_blob_features
 from fink_science_spark.operators.similarity import (
     cosine_topk_blocked,
-    hyperplane_component,
+    lsh_bucket_sql,
 )
 from fink_science_spark.operators.spatial import (
     nearest_join_1d,
     range_count_join_1d,
 )
 from fink_science_spark.queries import _events_us, _fan_out, _t, _ts_event_col
+from fink_science_spark.registry import register
 
 # Shared oracle CTE: tokenized + 3-gram-shingled documents
 _DOCS_TOK_CTE = f"""
@@ -433,20 +433,9 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_bucket_sql(vec: str) -> str:
-    bits = []
-    for j in range(_LSH_BITS):
-        terms = " + ".join(
-            f"{vec}[{d + 1}] * ({hyperplane_component(j, d)!r})"
-            for d in range(_EMB_DIM)
-        )
-        bits.append(f"(CASE WHEN ({terms}) > 0 THEN (1::BIGINT << {j}) ELSE 0 END)")
-    return "(" + " | ".join(bits) + ")"
-
-
 ORACLE_ANN_LSH_TOPK = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-b AS (SELECT vec_id, v, {_lsh_bucket_sql('v')} AS bucket FROM e),
+b AS (SELECT vec_id, v, {lsh_bucket_sql('v', _LSH_BITS, _EMB_DIM)} AS bucket FROM e),
 q AS (SELECT vec_id qid, v qv, bucket FROM b WHERE vec_id % 20 = 0),
 scored AS (
   SELECT q.qid, c.vec_id cid,
@@ -816,44 +805,26 @@ GROUP BY 1, 2
 """
 
 
-QUERIES_EXT: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "dedup_exact": q_dedup_exact,
-    "dedup_fingerprint": q_dedup_fingerprint,
-    "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-    "dedup_minhash_lsh": q_dedup_minhash_lsh,
-    "dedup_simhash": q_dedup_simhash,
-    "dedup_clusters": q_dedup_clusters,
-    "text_quality": q_text_quality,
-    "lang_id": q_lang_id,
-    "ann_cosine_topk": q_ann_cosine_topk,
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "spatial_nn": q_spatial_nn,
-    "spatial_range_count": q_spatial_range_count,
-    "blob_features": q_blob_features,
-    "blob_gzip_roundtrip": q_blob_gzip_roundtrip,
-    "frame_samples": q_frame_samples,
-    "enrich_score": q_enrich_score,
-    "mc_rate": q_mc_rate,
-    "stream_weekly_counts": q_stream_weekly_counts,
-}
-
-ORACLES_EXT: dict[str, str] = {
-    "dedup_exact": ORACLE_DEDUP_EXACT,
-    "dedup_fingerprint": ORACLE_DEDUP_FINGERPRINT,
-    "dedup_ngram_jaccard": ORACLE_DEDUP_NGRAM_JACCARD,
-    "dedup_minhash_lsh": ORACLE_DEDUP_MINHASH_LSH,
-    "dedup_simhash": ORACLE_DEDUP_SIMHASH,
-    "dedup_clusters": _oracle_dedup_clusters(),
-    "text_quality": ORACLE_TEXT_QUALITY,
-    "lang_id": ORACLE_LANG_ID,
-    "ann_cosine_topk": ORACLE_ANN_COSINE_TOPK,
-    "ann_lsh_topk": ORACLE_ANN_LSH_TOPK,
-    "spatial_nn": ORACLE_SPATIAL_NN,
-    "spatial_range_count": ORACLE_SPATIAL_RANGE_COUNT,
-    "blob_features": ORACLE_BLOB_FEATURES,
-    "blob_gzip_roundtrip": ORACLE_BLOB_GZIP_ROUNDTRIP,
-    "frame_samples": ORACLE_FRAME_SAMPLES,
-    "enrich_score": ORACLE_ENRICH_SCORE,
-    "mc_rate": ORACLE_MC_RATE,
-    "stream_weekly_counts": ORACLE_STREAM_WEEKLY_COUNTS,
-}
+register("dedup_exact", q_dedup_exact, ORACLE_DEDUP_EXACT, bench=False)
+register("dedup_fingerprint", q_dedup_fingerprint, ORACLE_DEDUP_FINGERPRINT,
+         bench=False)
+register("dedup_ngram_jaccard", q_dedup_ngram_jaccard,
+         ORACLE_DEDUP_NGRAM_JACCARD)
+register("dedup_minhash_lsh", q_dedup_minhash_lsh, ORACLE_DEDUP_MINHASH_LSH)
+register("dedup_simhash", q_dedup_simhash, ORACLE_DEDUP_SIMHASH)
+register("dedup_clusters", q_dedup_clusters, _oracle_dedup_clusters())
+register("text_quality", q_text_quality, ORACLE_TEXT_QUALITY)
+register("lang_id", q_lang_id, ORACLE_LANG_ID, bench=False)
+register("ann_cosine_topk", q_ann_cosine_topk, ORACLE_ANN_COSINE_TOPK)
+register("ann_lsh_topk", q_ann_lsh_topk, ORACLE_ANN_LSH_TOPK)
+register("spatial_nn", q_spatial_nn, ORACLE_SPATIAL_NN)
+register("spatial_range_count", q_spatial_range_count,
+         ORACLE_SPATIAL_RANGE_COUNT, bench=False)
+register("blob_features", q_blob_features, ORACLE_BLOB_FEATURES, bench=False)
+register("blob_gzip_roundtrip", q_blob_gzip_roundtrip,
+         ORACLE_BLOB_GZIP_ROUNDTRIP)
+register("frame_samples", q_frame_samples, ORACLE_FRAME_SAMPLES, bench=False)
+register("enrich_score", q_enrich_score, ORACLE_ENRICH_SCORE)
+register("mc_rate", q_mc_rate, ORACLE_MC_RATE)
+register("stream_weekly_counts", q_stream_weekly_counts,
+         ORACLE_STREAM_WEEKLY_COUNTS)

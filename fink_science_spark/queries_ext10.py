@@ -9,8 +9,6 @@ return EXACT answers; the sketch only prunes or pre-aggregates.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,6 +29,7 @@ from fink_science_spark.operators.sketches import (
     histogram_quantiles,
     histogram_quantiles_oracle_sql,
 )
+from fink_science_spark.registry import register
 
 # --------------------------------------------------------------------------
 # bloom_prune_join: revenue of lineitems belonging to urgent high-value
@@ -699,7 +698,10 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from fink_science_spark.streaming.shell import scoped_shuffle_partitions
+    from fink_science_spark.streaming.shell import (
+        run_to_memory,
+        scoped_shuffle_partitions,
+    )
 
     schema = _t(spark, sf_dir, "documents").schema
 
@@ -732,26 +734,18 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        name = f"hh_{uuid.uuid4().hex[:8]}"
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+        sink = run_to_memory(
+            out, f"hh_{uuid.uuid4().hex[:8]}", spark, output_mode="update"
         )
-        q.awaitTermination()
 
-    # Materialize the final state (vocabulary-sized) and DROP the memory
-    # sink before returning — the MemorySink otherwise retains every
-    # update-mode emission in driver memory for the session lifetime,
-    # one uuid-named table per invocation.
+    # Materialize the final state (vocabulary-sized) before returning —
+    # the MemorySink otherwise retains every update-mode emission in
+    # driver memory for as long as the returned frame reads it.
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("token").orderBy(F.col("cnt").desc())
     final = (
-        spark.table(name)
-        .withColumn("__rn", F.row_number().over(w))
+        sink.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .select("token", "cnt")
         # executor-side materialization (vocabulary-sized) instead of the
@@ -761,7 +755,6 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # driver twice (r9, guide §5 "the driver should do no data work")
         .localCheckpoint(eager=True)
     )
-    spark.catalog.dropTempView(name)
     totals = final.agg(F.sum("cnt").alias("__nt"))
     return (
         final.join(F.broadcast(totals))
@@ -3802,97 +3795,59 @@ ORDER BY iv.user_id, iv.session_id, window_day
 """
 
 
-QUERIES_EXT10: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "bloom_prune_join": q_bloom_prune_join,
-    "sketch_quantiles": q_sketch_quantiles,
-    "heavy_hitters": q_heavy_hitters,
-    "lm_quality_buckets": q_lm_quality_buckets,
-    "pq_compression": q_pq_compression,
-    "stream_heavy_hitters": q_stream_heavy_hitters,
-    "pq_adc_topk": q_pq_adc_topk,
-    "resample_ffill": q_resample_ffill,
-    "feature_drift_psi": q_feature_drift_psi,
-    "weighted_sample": q_weighted_sample,
-    "user_trend": q_user_trend,
-    "quantile_transform": q_quantile_transform,
-    "pmi_collocations": q_pmi_collocations,
-    "decontaminate_bloom": q_decontaminate_bloom,
-    "dedup_jaccard_ppjoin": q_dedup_jaccard_ppjoin,
-    "dup_span_profile": q_dup_span_profile,
-    "image_phash_dedup": q_image_phash_dedup,
-    "semantic_dedup": q_semantic_dedup,
-    "hll_distinct_portable": q_hll_distinct_portable,
-    "shard_manifest": q_shard_manifest,
-    "stream_dedup_lsh": q_stream_dedup_lsh,
-    "temperature_mix_sample": q_temperature_mix_sample,
-    "hard_negatives": q_hard_negatives,
-    "dsir_select": q_dsir_select,
-    "funnel_steps": q_funnel_steps,
-    "retention_cohorts": q_retention_cohorts,
-    "rolling_range_window": q_rolling_range_window,
-    "table_profile": q_table_profile,
-    "event_transitions": q_event_transitions,
-    "contingency_chi2": q_contingency_chi2,
-    "triangle_count": q_triangle_count,
-    "sessions_native": q_sessions_native,
-    "cusum_changepoints": q_cusum_changepoints,
-    "correlated_subquery": q_correlated_subquery,
-    "grouping_sets_id": q_grouping_sets_id,
-    "set_ops_multiplicity": q_set_ops_multiplicity,
-    "cogroup_reconcile": q_cogroup_reconcile,
-    "cdc_apply": q_cdc_apply,
-    "interval_overlap_join": q_interval_overlap_join,
-}
-
-ORACLES_EXT10: dict[str, str] = {
-    "bloom_prune_join": ORACLE_BLOOM_PRUNE_JOIN,
-    "sketch_quantiles": ORACLE_SKETCH_QUANTILES,
-    "heavy_hitters": ORACLE_HEAVY_HITTERS,
-    "lm_quality_buckets": ORACLE_LM_QUALITY_BUCKETS,
-    "pq_compression": ORACLE_PQ_COMPRESSION,
-    # stream_heavy_hitters: the final stateful emission equals the batch
-    # aggregate, so it shares the batch heavy-hitters oracle.
-    "stream_heavy_hitters": ORACLE_HEAVY_HITTERS,
-    "pq_adc_topk": ORACLE_PQ_ADC_TOPK,
-    "resample_ffill": ORACLE_RESAMPLE_FFILL,
-    "feature_drift_psi": ORACLE_FEATURE_DRIFT_PSI,
-    "weighted_sample": ORACLE_WEIGHTED_SAMPLE,
-    "user_trend": ORACLE_USER_TREND,
-    "quantile_transform": ORACLE_QUANTILE_TRANSFORM,
-    "pmi_collocations": ORACLE_PMI_COLLOCATIONS,
-    # decontaminate_bloom: identical semantics to the exact path — the
-    # bloom only prunes; shares decontaminate's oracle.
-    "decontaminate_bloom": _ORACLE_DECON,
-    # dedup_jaccard_ppjoin: prefix filtering changes the candidate set,
-    # not the answer — shares the exact-Jaccard-pairs oracle.
-    "dedup_jaccard_ppjoin": _ORACLE_JACCARD,
-    "dup_span_profile": _oracle_dup_span_profile(),
-    "image_phash_dedup": ORACLE_IMAGE_PHASH_DEDUP,
-    "semantic_dedup": _oracle_semantic_dedup(),
-    "hll_distinct_portable": _oracle_hll_distinct_portable(),
-    "shard_manifest": _oracle_shard_manifest(),
-    # stream_dedup_lsh: the chunk-independent candidate emission makes
-    # the verified streaming answer equal the batch LSH pairs — shares
-    # dedup_minhash_lsh's oracle.
-    "stream_dedup_lsh": _ORACLE_MINHASH,
-    "temperature_mix_sample": _oracle_temperature_mix_sample(),
-    "hard_negatives": ORACLE_HARD_NEGATIVES,
-    "dsir_select": ORACLE_DSIR_SELECT,
-    "funnel_steps": ORACLE_FUNNEL_STEPS,
-    "retention_cohorts": ORACLE_RETENTION_COHORTS,
-    "rolling_range_window": ORACLE_ROLLING_RANGE_WINDOW,
-    "table_profile": _oracle_table_profile(),
-    "event_transitions": ORACLE_EVENT_TRANSITIONS,
-    "contingency_chi2": ORACLE_CONTINGENCY_CHI2,
-    "triangle_count": _oracle_triangle_count(),
-    # sessions_native: the gaps-and-islands scale twin of udtf_sessions —
-    # same answer, shares its oracle.
-    "sessions_native": _ORACLE_UDTF_SESSIONS,
-    "cusum_changepoints": ORACLE_CUSUM_CHANGEPOINTS,
-    "correlated_subquery": ORACLE_CORRELATED_SUBQUERY,
-    "grouping_sets_id": ORACLE_GROUPING_SETS_ID,
-    "set_ops_multiplicity": ORACLE_SET_OPS_MULTIPLICITY,
-    "cogroup_reconcile": ORACLE_COGROUP_RECONCILE,
-    "cdc_apply": ORACLE_CDC_APPLY,
-    "interval_overlap_join": _oracle_interval_overlap_join(),
-}
+register("bloom_prune_join", q_bloom_prune_join, ORACLE_BLOOM_PRUNE_JOIN)
+register("sketch_quantiles", q_sketch_quantiles, ORACLE_SKETCH_QUANTILES)
+register("heavy_hitters", q_heavy_hitters, ORACLE_HEAVY_HITTERS)
+register("lm_quality_buckets", q_lm_quality_buckets, ORACLE_LM_QUALITY_BUCKETS)
+register("pq_compression", q_pq_compression, ORACLE_PQ_COMPRESSION)
+# stream_heavy_hitters: the final stateful emission equals the batch
+# aggregate, so it shares the batch heavy-hitters oracle.
+register("stream_heavy_hitters", q_stream_heavy_hitters, ORACLE_HEAVY_HITTERS)
+register("pq_adc_topk", q_pq_adc_topk, ORACLE_PQ_ADC_TOPK)
+register("resample_ffill", q_resample_ffill, ORACLE_RESAMPLE_FFILL)
+register("feature_drift_psi", q_feature_drift_psi, ORACLE_FEATURE_DRIFT_PSI)
+register("weighted_sample", q_weighted_sample, ORACLE_WEIGHTED_SAMPLE)
+register("user_trend", q_user_trend, ORACLE_USER_TREND)
+register("quantile_transform", q_quantile_transform, ORACLE_QUANTILE_TRANSFORM)
+register("pmi_collocations", q_pmi_collocations, ORACLE_PMI_COLLOCATIONS)
+# decontaminate_bloom: identical semantics to the exact path — the
+# bloom only prunes; shares decontaminate's oracle.
+register("decontaminate_bloom", q_decontaminate_bloom, _ORACLE_DECON)
+# dedup_jaccard_ppjoin: prefix filtering changes the candidate set,
+# not the answer — shares the exact-Jaccard-pairs oracle.
+register("dedup_jaccard_ppjoin", q_dedup_jaccard_ppjoin, _ORACLE_JACCARD)
+register("dup_span_profile", q_dup_span_profile, _oracle_dup_span_profile())
+register("image_phash_dedup", q_image_phash_dedup, ORACLE_IMAGE_PHASH_DEDUP)
+register("semantic_dedup", q_semantic_dedup, _oracle_semantic_dedup())
+register("hll_distinct_portable", q_hll_distinct_portable,
+         _oracle_hll_distinct_portable())
+register("shard_manifest", q_shard_manifest, _oracle_shard_manifest())
+# stream_dedup_lsh: the chunk-independent candidate emission makes
+# the verified streaming answer equal the batch LSH pairs — shares
+# dedup_minhash_lsh's oracle.
+register("stream_dedup_lsh", q_stream_dedup_lsh, _ORACLE_MINHASH)
+register("temperature_mix_sample", q_temperature_mix_sample,
+         _oracle_temperature_mix_sample())
+register("hard_negatives", q_hard_negatives, ORACLE_HARD_NEGATIVES)
+register("dsir_select", q_dsir_select, ORACLE_DSIR_SELECT)
+register("funnel_steps", q_funnel_steps, ORACLE_FUNNEL_STEPS)
+register("retention_cohorts", q_retention_cohorts, ORACLE_RETENTION_COHORTS)
+register("rolling_range_window", q_rolling_range_window,
+         ORACLE_ROLLING_RANGE_WINDOW)
+register("table_profile", q_table_profile, _oracle_table_profile())
+register("event_transitions", q_event_transitions, ORACLE_EVENT_TRANSITIONS)
+register("contingency_chi2", q_contingency_chi2, ORACLE_CONTINGENCY_CHI2)
+register("triangle_count", q_triangle_count, _oracle_triangle_count())
+# sessions_native: the gaps-and-islands scale twin of udtf_sessions —
+# same answer, shares its oracle.
+register("sessions_native", q_sessions_native, _ORACLE_UDTF_SESSIONS)
+register("cusum_changepoints", q_cusum_changepoints, ORACLE_CUSUM_CHANGEPOINTS)
+register("correlated_subquery", q_correlated_subquery,
+         ORACLE_CORRELATED_SUBQUERY)
+register("grouping_sets_id", q_grouping_sets_id, ORACLE_GROUPING_SETS_ID)
+register("set_ops_multiplicity", q_set_ops_multiplicity,
+         ORACLE_SET_OPS_MULTIPLICITY)
+register("cogroup_reconcile", q_cogroup_reconcile, ORACLE_COGROUP_RECONCILE)
+register("cdc_apply", q_cdc_apply, ORACLE_CDC_APPLY)
+register("interval_overlap_join", q_interval_overlap_join,
+         _oracle_interval_overlap_join())

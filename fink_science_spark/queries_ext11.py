@@ -13,10 +13,10 @@ floor idiom on both engines.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from fink_science_spark.registry import register
 
 _US_PER_DAY = 86_400_000_000
 
@@ -775,26 +775,14 @@ LIMIT 20
 ORACLE_SESSION_PATHS = _oracle_session_paths()
 
 
-QUERIES_EXT11: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "part_affinity": q_part_affinity,
-    "sliding_distinct_users": q_sliding_distinct_users,
-    "last_touch_attribution": q_last_touch_attribution,
-    "ewma_user_value": q_ewma_user_value,
-    "robust_outliers": q_robust_outliers,
-    "phrase_match": q_phrase_match,
-    "containment_pairs": q_containment_pairs,
-    "winsorized_stats": q_winsorized_stats,
-    "session_paths": q_session_paths,
-}
-
-ORACLES_EXT11: dict[str, str] = {
-    "part_affinity": ORACLE_PART_AFFINITY,
-    "sliding_distinct_users": ORACLE_SLIDING_DISTINCT_USERS,
-    "last_touch_attribution": ORACLE_LAST_TOUCH_ATTRIBUTION,
-    "ewma_user_value": ORACLE_EWMA_USER_VALUE,
-    "robust_outliers": ORACLE_ROBUST_OUTLIERS,
-    "phrase_match": ORACLE_PHRASE_MATCH,
-    "containment_pairs": ORACLE_CONTAINMENT_PAIRS,
-    "winsorized_stats": ORACLE_WINSORIZED_STATS,
-    "session_paths": ORACLE_SESSION_PATHS,
-}
+register("part_affinity", q_part_affinity, ORACLE_PART_AFFINITY)
+register("sliding_distinct_users", q_sliding_distinct_users,
+         ORACLE_SLIDING_DISTINCT_USERS)
+register("last_touch_attribution", q_last_touch_attribution,
+         ORACLE_LAST_TOUCH_ATTRIBUTION)
+register("ewma_user_value", q_ewma_user_value, ORACLE_EWMA_USER_VALUE)
+register("robust_outliers", q_robust_outliers, ORACLE_ROBUST_OUTLIERS)
+register("phrase_match", q_phrase_match, ORACLE_PHRASE_MATCH)
+register("containment_pairs", q_containment_pairs, ORACLE_CONTAINMENT_PAIRS)
+register("winsorized_stats", q_winsorized_stats, ORACLE_WINSORIZED_STATS)
+register("session_paths", q_session_paths, ORACLE_SESSION_PATHS)

@@ -21,8 +21,6 @@ Scale shapes, per the engine contract:
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,6 +30,7 @@ from fink_science_spark.queries import _t
 # canonical home: functions/exact.py (re-exported here because every
 # later wave already imports the underscore name from this module)
 from fink_science_spark.functions.exact import halfup6 as _halfup6  # noqa: E402
+from fink_science_spark.registry import register
 
 
 # --------------------------------------------------------------------------
@@ -504,17 +503,9 @@ ORDER BY qid, step
 ORACLE_MMR_DIVERSE_TOPK = _oracle_mmr()
 
 
-QUERIES_EXT12: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "skyline_frontier": q_skyline_frontier,
-    "segment_overlap": q_segment_overlap,
-    "mmr_diverse_topk": q_mmr_diverse_topk,
-}
-
-ORACLES_EXT12: dict[str, str] = {
-    "skyline_frontier": ORACLE_SKYLINE_FRONTIER,
-    "segment_overlap": ORACLE_SEGMENT_OVERLAP,
-    "mmr_diverse_topk": ORACLE_MMR_DIVERSE_TOPK,
-}
+register("skyline_frontier", q_skyline_frontier, ORACLE_SKYLINE_FRONTIER)
+register("segment_overlap", q_segment_overlap, ORACLE_SEGMENT_OVERLAP)
+register("mmr_diverse_topk", q_mmr_diverse_topk, ORACLE_MMR_DIVERSE_TOPK)
 
 
 # --------------------------------------------------------------------------
@@ -644,8 +635,7 @@ ORDER BY event_type
 
 ORACLE_HLL_ROLLUP = _oracle_hll_rollup()
 
-QUERIES_EXT12["hll_rollup"] = q_hll_rollup
-ORACLES_EXT12["hll_rollup"] = ORACLE_HLL_ROLLUP
+register("hll_rollup", q_hll_rollup, ORACLE_HLL_ROLLUP)
 
 
 # --------------------------------------------------------------------------
@@ -741,8 +731,7 @@ SELECT count(*)::BIGINT AS n, median(l_extendedprice::DOUBLE) AS median
 FROM lineitem
 """
 
-QUERIES_EXT12["median_bracket"] = q_median_bracket
-ORACLES_EXT12["median_bracket"] = ORACLE_MEDIAN_BRACKET
+register("median_bracket", q_median_bracket, ORACLE_MEDIAN_BRACKET)
 
 
 # --------------------------------------------------------------------------
@@ -784,5 +773,4 @@ SELECT doc_id, thumb,
 FROM t
 """
 
-QUERIES_EXT12["image_thumbnail"] = q_image_thumbnail
-ORACLES_EXT12["image_thumbnail"] = ORACLE_IMAGE_THUMBNAIL
+register("image_thumbnail", q_image_thumbnail, ORACLE_IMAGE_THUMBNAIL)

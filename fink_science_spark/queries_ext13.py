@@ -44,18 +44,13 @@ Scale shapes, per the engine contract:
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fink_science_spark.functions.text import tokens, tokens_sql
 from fink_science_spark.queries import _fan_out, _t
 from fink_science_spark.queries_ext12 import _halfup6
-
-
-QUERIES_EXT13: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES_EXT13: dict[str, str] = {}
+from fink_science_spark.registry import register
 
 
 # --------------------------------------------------------------------------
@@ -185,8 +180,7 @@ ORDER BY score DESC, doc_id ASC
 LIMIT {_BM25_K}
 """
 
-QUERIES_EXT13["bm25_topk"] = q_bm25_topk
-ORACLES_EXT13["bm25_topk"] = ORACLE_BM25_TOPK
+register("bm25_topk", q_bm25_topk, ORACLE_BM25_TOPK)
 
 
 # --------------------------------------------------------------------------
@@ -271,8 +265,7 @@ SELECT dirty_id, p_partkey AS match_id, dist::INT AS dist
 FROM ranked WHERE rn = 1
 """
 
-QUERIES_EXT13["fuzzy_match_names"] = q_fuzzy_match_names
-ORACLES_EXT13["fuzzy_match_names"] = ORACLE_FUZZY_MATCH_NAMES
+register("fuzzy_match_names", q_fuzzy_match_names, ORACLE_FUZZY_MATCH_NAMES)
 
 
 # --------------------------------------------------------------------------
@@ -329,8 +322,7 @@ SELECT doc_id, lang, source, n_chars, n_stratum
 FROM h WHERE rn <= ceil(n_stratum * {_STRAT_FRAC})
 """
 
-QUERIES_EXT13["stratified_sample"] = q_stratified_sample
-ORACLES_EXT13["stratified_sample"] = ORACLE_STRATIFIED_SAMPLE
+register("stratified_sample", q_stratified_sample, ORACLE_STRATIFIED_SAMPLE)
 
 
 # --------------------------------------------------------------------------
@@ -425,8 +417,7 @@ FROM num CROSS JOIN den
 ORDER BY lag
 """
 
-QUERIES_EXT13["acf_lags"] = q_acf_lags
-ORACLES_EXT13["acf_lags"] = ORACLE_ACF_LAGS
+register("acf_lags", q_acf_lags, ORACLE_ACF_LAGS)
 
 
 # --------------------------------------------------------------------------
@@ -516,8 +507,7 @@ FROM seasonal JOIN resid USING (pos)
 ORDER BY pos
 """
 
-QUERIES_EXT13["seasonal_decompose"] = q_seasonal_decompose
-ORACLES_EXT13["seasonal_decompose"] = ORACLE_SEASONAL_DECOMPOSE
+register("seasonal_decompose", q_seasonal_decompose, ORACLE_SEASONAL_DECOMPOSE)
 
 
 # --------------------------------------------------------------------------
@@ -587,8 +577,8 @@ SELECT bucket, batch_id,
 FROM assigned GROUP BY bucket, batch_id
 """
 
-QUERIES_EXT13["length_bucket_batches"] = q_length_bucket_batches
-ORACLES_EXT13["length_bucket_batches"] = ORACLE_LENGTH_BUCKET_BATCHES
+register("length_bucket_batches", q_length_bucket_batches,
+         ORACLE_LENGTH_BUCKET_BATCHES)
 
 
 # --------------------------------------------------------------------------
@@ -679,8 +669,7 @@ SELECT CASE WHEN va IS NULL THEN 'added'
 FROM joined GROUP BY 1
 """
 
-QUERIES_EXT13["snapshot_diff"] = q_snapshot_diff
-ORACLES_EXT13["snapshot_diff"] = ORACLE_SNAPSHOT_DIFF
+register("snapshot_diff", q_snapshot_diff, ORACLE_SNAPSHOT_DIFF)
 
 
 # ==========================================================================
@@ -830,8 +819,7 @@ ORDER BY rrf DESC, doc_id ASC
 LIMIT {_RRF_TOP}
 """
 
-QUERIES_EXT13["rrf_fusion"] = q_rrf_fusion
-ORACLES_EXT13["rrf_fusion"] = ORACLE_RRF_FUSION
+register("rrf_fusion", q_rrf_fusion, ORACLE_RRF_FUSION)
 
 
 # --------------------------------------------------------------------------
@@ -931,8 +919,7 @@ SELECT na, nb,
 FROM c
 """
 
-QUERIES_EXT13["ab_welch_ttest"] = q_ab_welch_ttest
-ORACLES_EXT13["ab_welch_ttest"] = ORACLE_AB_WELCH_TTEST
+register("ab_welch_ttest", q_ab_welch_ttest, ORACLE_AB_WELCH_TTEST)
 
 
 # --------------------------------------------------------------------------
@@ -1017,8 +1004,7 @@ FROM (SELECT * FROM e1 UNION ALL SELECT * FROM e2
       UNION ALL SELECT * FROM e3 UNION ALL SELECT * FROM e4)
 """
 
-QUERIES_EXT13["fk_integrity_audit"] = q_fk_integrity_audit
-ORACLES_EXT13["fk_integrity_audit"] = ORACLE_FK_INTEGRITY_AUDIT
+register("fk_integrity_audit", q_fk_integrity_audit, ORACLE_FK_INTEGRITY_AUDIT)
 
 
 # --------------------------------------------------------------------------
@@ -1134,8 +1120,7 @@ FROM binned CROSS JOIN tot
 GROUP BY bin, n_total
 """
 
-QUERIES_EXT13["calibration_bins"] = q_calibration_bins
-ORACLES_EXT13["calibration_bins"] = ORACLE_CALIBRATION_BINS
+register("calibration_bins", q_calibration_bins, ORACLE_CALIBRATION_BINS)
 
 
 # --------------------------------------------------------------------------
@@ -1222,5 +1207,4 @@ FROM best b JOIN counts c USING (user_id)
 WHERE b.rn = 1
 """
 
-QUERIES_EXT13["gap_islands"] = q_gap_islands
-ORACLES_EXT13["gap_islands"] = ORACLE_GAP_ISLANDS
+register("gap_islands", q_gap_islands, ORACLE_GAP_ISLANDS)

@@ -61,8 +61,6 @@ Scale shapes, per the engine contract:
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -82,9 +80,7 @@ from fink_science_spark.functions.exact import (
     rev_micro as _rev_micro,
 )
 from fink_science_spark.queries import _t
-
-QUERIES_EXT14: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES_EXT14: dict[str, str] = {}
+from fink_science_spark.registry import register
 
 
 # --------------------------------------------------------------------------
@@ -201,8 +197,7 @@ ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
 LIMIT 100
 """
 
-QUERIES_EXT14["min_cost_supplier"] = q_min_cost_supplier
-ORACLES_EXT14["min_cost_supplier"] = ORACLE_MIN_COST_SUPPLIER
+register("min_cost_supplier", q_min_cost_supplier, ORACLE_MIN_COST_SUPPLIER)
 
 
 # --------------------------------------------------------------------------
@@ -295,8 +290,7 @@ SELECT o_year,
 FROM agg
 """
 
-QUERIES_EXT14["market_share"] = q_market_share
-ORACLES_EXT14["market_share"] = ORACLE_MARKET_SHARE
+register("market_share", q_market_share, ORACLE_MARKET_SHARE)
 
 
 # --------------------------------------------------------------------------
@@ -375,8 +369,7 @@ SELECT n_name, o_year,
 FROM profit GROUP BY n_name, o_year
 """
 
-QUERIES_EXT14["product_profit"] = q_product_profit
-ORACLES_EXT14["product_profit"] = ORACLE_PRODUCT_PROFIT
+register("product_profit", q_product_profit, ORACLE_PRODUCT_PROFIT)
 
 
 # --------------------------------------------------------------------------
@@ -457,8 +450,7 @@ WHERE value_cents > (SELECT (2 * CAST(SUM(value_cents) AS BIGINT)) // COUNT(*)
                      FROM per_part)
 """
 
-QUERIES_EXT14["important_parts"] = q_important_parts
-ORACLES_EXT14["important_parts"] = ORACLE_IMPORTANT_PARTS
+register("important_parts", q_important_parts, ORACLE_IMPORTANT_PARTS)
 
 
 # --------------------------------------------------------------------------
@@ -505,8 +497,8 @@ FROM (
 GROUP BY c_count
 """
 
-QUERIES_EXT14["custorder_distribution"] = q_custorder_distribution
-ORACLES_EXT14["custorder_distribution"] = ORACLE_CUSTORDER_DISTRIBUTION
+register("custorder_distribution", q_custorder_distribution,
+         ORACLE_CUSTORDER_DISTRIBUTION)
 
 
 # --------------------------------------------------------------------------
@@ -564,8 +556,7 @@ FROM rev JOIN supplier ON l_suppkey = s_suppkey
 WHERE total_micro = (SELECT MAX(total_micro) FROM rev)
 """
 
-QUERIES_EXT14["top_supplier"] = q_top_supplier
-ORACLES_EXT14["top_supplier"] = ORACLE_TOP_SUPPLIER
+register("top_supplier", q_top_supplier, ORACLE_TOP_SUPPLIER)
 
 
 # --------------------------------------------------------------------------
@@ -627,8 +618,8 @@ WHERE p_brand <> 'Brand#5'
 GROUP BY p_brand, p_type, p_size
 """
 
-QUERIES_EXT14["supplier_part_counts"] = q_supplier_part_counts
-ORACLES_EXT14["supplier_part_counts"] = ORACLE_SUPPLIER_PART_COUNTS
+register("supplier_part_counts", q_supplier_part_counts,
+         ORACLE_SUPPLIER_PART_COUNTS)
 
 
 # --------------------------------------------------------------------------
@@ -683,8 +674,7 @@ FROM li JOIN qlim USING (l_partkey)
 WHERE l_quantity < qty_limit
 """
 
-QUERIES_EXT14["small_qty_revenue"] = q_small_qty_revenue
-ORACLES_EXT14["small_qty_revenue"] = ORACLE_SMALL_QTY_REVENUE
+register("small_qty_revenue", q_small_qty_revenue, ORACLE_SMALL_QTY_REVENUE)
 
 
 # --------------------------------------------------------------------------
@@ -741,8 +731,8 @@ ORDER BY o_totalprice DESC, o_orderkey
 LIMIT 100
 """
 
-QUERIES_EXT14["large_volume_customers"] = q_large_volume_customers
-ORACLES_EXT14["large_volume_customers"] = ORACLE_LARGE_VOLUME_CUSTOMERS
+register("large_volume_customers", q_large_volume_customers,
+         ORACLE_LARGE_VOLUME_CUSTOMERS)
 
 
 # --------------------------------------------------------------------------
@@ -801,8 +791,8 @@ FROM lineitem JOIN part ON l_partkey = p_partkey
 WHERE {_DJ_BANDS_SQL}
 """
 
-QUERIES_EXT14["disjunctive_revenue"] = q_disjunctive_revenue
-ORACLES_EXT14["disjunctive_revenue"] = ORACLE_DISJUNCTIVE_REVENUE
+register("disjunctive_revenue", q_disjunctive_revenue,
+         ORACLE_DISJUNCTIVE_REVENUE)
 
 
 # --------------------------------------------------------------------------
@@ -910,8 +900,7 @@ ORDER BY numwait DESC, s_name
 LIMIT 50
 """
 
-QUERIES_EXT14["sole_late_supplier"] = q_sole_late_supplier
-ORACLES_EXT14["sole_late_supplier"] = ORACLE_SOLE_LATE_SUPPLIER
+register("sole_late_supplier", q_sole_late_supplier, ORACLE_SOLE_LATE_SUPPLIER)
 
 
 # --------------------------------------------------------------------------
@@ -983,5 +972,4 @@ WHERE acct_cents * n_pos > pos_total_cents
 GROUP BY c_nationkey
 """
 
-QUERIES_EXT14["dormant_customers"] = q_dormant_customers
-ORACLES_EXT14["dormant_customers"] = ORACLE_DORMANT_CUSTOMERS
+register("dormant_customers", q_dormant_customers, ORACLE_DORMANT_CUSTOMERS)

@@ -38,16 +38,12 @@ Scale shapes, per the engine contract:
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fink_science_spark.queries import _t
 from fink_science_spark.queries_ext12 import _halfup6
-
-QUERIES_EXT15: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES_EXT15: dict[str, str] = {}
+from fink_science_spark.registry import register
 
 
 # --------------------------------------------------------------------------
@@ -125,8 +121,8 @@ ORACLE_PARTITION_SKEW_REPORT = (
     + " UNION ALL ".join(_skew_report_sql(k) for k in _SKEW_KEYS)
 )
 
-QUERIES_EXT15["partition_skew_report"] = q_partition_skew_report
-ORACLES_EXT15["partition_skew_report"] = ORACLE_PARTITION_SKEW_REPORT
+register("partition_skew_report", q_partition_skew_report,
+         ORACLE_PARTITION_SKEW_REPORT)
 
 
 # --------------------------------------------------------------------------
@@ -253,8 +249,7 @@ SELECT n,
 FROM s
 """
 
-QUERIES_EXT15["zipf_skew_fit"] = q_zipf_skew_fit
-ORACLES_EXT15["zipf_skew_fit"] = ORACLE_ZIPF_SKEW_FIT
+register("zipf_skew_fit", q_zipf_skew_fit, ORACLE_ZIPF_SKEW_FIT)
 
 
 # --------------------------------------------------------------------------
@@ -309,8 +304,7 @@ SELECT source, bin, COUNT(*) AS n_files,
 FROM binned GROUP BY source, bin
 """
 
-QUERIES_EXT15["compaction_plan"] = q_compaction_plan
-ORACLES_EXT15["compaction_plan"] = ORACLE_COMPACTION_PLAN
+register("compaction_plan", q_compaction_plan, ORACLE_COMPACTION_PLAN)
 
 
 # --------------------------------------------------------------------------
@@ -382,5 +376,4 @@ SELECT bucket, MIN(l_partkey) AS lo_key, MAX(l_partkey) AS hi_key,
 FROM assigned GROUP BY bucket
 """
 
-QUERIES_EXT15["balanced_ranges"] = q_balanced_ranges
-ORACLES_EXT15["balanced_ranges"] = ORACLE_BALANCED_RANGES
+register("balanced_ranges", q_balanced_ranges, ORACLE_BALANCED_RANGES)

@@ -34,15 +34,11 @@ Scale shapes, per the engine contract:
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fink_science_spark.queries import _fan_out, _t
-
-QUERIES_EXT16: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES_EXT16: dict[str, str] = {}
+from fink_science_spark.registry import register
 
 
 # --------------------------------------------------------------------------
@@ -148,8 +144,7 @@ SELECT doc_id, COUNT(*) AS n_frames,
 FROM j GROUP BY doc_id
 """
 
-QUERIES_EXT16["video_scene_cuts"] = q_video_scene_cuts
-ORACLES_EXT16["video_scene_cuts"] = ORACLE_VIDEO_SCENE_CUTS
+register("video_scene_cuts", q_video_scene_cuts, ORACLE_VIDEO_SCENE_CUTS)
 
 
 # --------------------------------------------------------------------------
@@ -273,5 +268,4 @@ FROM (SELECT * FROM documents WHERE text IS NOT NULL) d
 LEFT JOIN agg ON d.doc_id = agg.doc_id
 """
 
-QUERIES_EXT16["audio_silence_map"] = q_audio_silence_map
-ORACLES_EXT16["audio_silence_map"] = ORACLE_AUDIO_SILENCE_MAP
+register("audio_silence_map", q_audio_silence_map, ORACLE_AUDIO_SILENCE_MAP)

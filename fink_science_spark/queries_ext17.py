@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fink_science_spark.queries import _events_us, _fan_out
+from fink_science_spark.registry import register
 
 # --------------------------------------------------------------------------
 # snn_ia_real
@@ -183,9 +184,6 @@ feat AS (
 SELECT user_id, n, round({prob}, 6) AS snn_ia_real
 FROM {last}
 """
-
-
-ORACLE_SNN_IA_REAL = None  # built lazily: see ORACLES_EXT17 below
 
 
 # --------------------------------------------------------------------------
@@ -2031,71 +2029,17 @@ def q_t2_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lazy_oracles() -> dict[str, str]:
-    return {
-        "snn_ia_real": _oracle_snn_real(),
-        "mulens_real": _oracle_mulens_real(),
-        "mulens_real_lia": _oracle_mulens_real_lia(),
-        "orphan_real": _oracle_orphan_real(),
-        "kn_rf_real": _oracle_kn_rf_real(),
-        "anomaly_real": _oracle_anomaly_real(),
-        "anomaly_real_lc": _oracle_anomaly_real_lc(),
-        "superluminous_real": _oracle_superluminous_real(),
-        "kn_legacy_real": _oracle_kn_legacy_real(),
-    }
-
-
-QUERIES_EXT17 = {
-    "snn_ia_real": q_snn_ia_real,
-    "mulens_real": q_mulens_real,
-    "mulens_real_lia": q_mulens_real_lia,
-    "orphan_real": q_orphan_real,
-    "kn_rf_real": q_kn_rf_real,
-    "anomaly_real": q_anomaly_real,
-    "anomaly_real_lc": q_anomaly_real_lc,
-    "superluminous_real": q_superluminous_real,
-    "kn_legacy_real": q_kn_legacy_real,
-    "t2_real": q_t2_real,
-    "cats_real": q_cats_real,
-}
-
-
-class _LazyOracles(dict):
-    """Oracle SQL for this wave embeds ~36k weight literals; build it on
-    first access instead of at import."""
-
-    def __init__(self):
-        super().__init__()
-        self._built = False
-
-    def _ensure(self):
-        if not self._built:
-            super().update(_lazy_oracles())
-            self._built = True
-
-    def __getitem__(self, k):
-        self._ensure()
-        return super().__getitem__(k)
-
-    def __contains__(self, k):
-        self._ensure()
-        return super().__contains__(k)
-
-    def __iter__(self):
-        self._ensure()
-        return super().__iter__()
-
-    def keys(self):
-        self._ensure()
-        return super().keys()
-
-    def items(self):
-        self._ensure()
-        return super().items()
-
-    def __len__(self):
-        self._ensure()
-        return super().__len__()
-
-
-ORACLES_EXT17 = _LazyOracles()
+# Oracle SQL for this wave embeds ~36k weight literals: register the
+# oracle builders, so the SQL is built on first use instead of at import.
+register("snn_ia_real", q_snn_ia_real, _oracle_snn_real)
+register("mulens_real", q_mulens_real, _oracle_mulens_real)
+register("mulens_real_lia", q_mulens_real_lia, _oracle_mulens_real_lia)
+register("orphan_real", q_orphan_real, _oracle_orphan_real)
+register("kn_rf_real", q_kn_rf_real, _oracle_kn_rf_real)
+register("anomaly_real", q_anomaly_real, _oracle_anomaly_real)
+register("anomaly_real_lc", q_anomaly_real_lc, _oracle_anomaly_real_lc)
+register("superluminous_real", q_superluminous_real,
+         _oracle_superluminous_real)
+register("kn_legacy_real", q_kn_legacy_real, _oracle_kn_legacy_real)
+register("t2_real", q_t2_real)
+register("cats_real", q_cats_real, bench=False)

@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import os
 import uuid
-from typing import Callable
 
 import pandas as pd
 
@@ -20,8 +19,10 @@ from pyspark.sql import functions as F
 
 from fink_science_spark.functions.arrays import trapezoid_integral
 from fink_science_spark.operators.aggregates import fit_features_per_group
+from fink_science_spark.operators.similarity import lsh_bucket_sql
 from fink_science_spark.operators.spatial import nearest_join_sky
 from fink_science_spark.queries import _events_us, _fan_out, _t, _ts_event_col
+from fink_science_spark.registry import register
 
 DAY_US = 24 * 3600 * 1_000_000
 WEEK_US = 7 * DAY_US
@@ -314,22 +315,9 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.select("id_a", "id_b", F.round("cosr", 6).alias("cos"))
 
 
-def _lsh_bucket_sql(vec: str) -> str:
-    from fink_science_spark.operators.similarity import hyperplane_component
-
-    bits = []
-    for j in range(_COS_BITS):
-        terms = " + ".join(
-            f"{vec}[{d + 1}] * ({hyperplane_component(j, d)!r})"
-            for d in range(_EMB_DIM)
-        )
-        bits.append(f"(CASE WHEN ({terms}) > 0 THEN (1::BIGINT << {j}) ELSE 0 END)")
-    return "(" + " | ".join(bits) + ")"
-
-
 ORACLE_DEDUP_EMBEDDING_COSINE = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-b AS (SELECT vec_id, v, {_lsh_bucket_sql('v')} AS bucket FROM e)
+b AS (SELECT vec_id, v, {lsh_bucket_sql('v', _COS_BITS, _EMB_DIM)} AS bucket FROM e)
 SELECT a.vec_id AS id_a, bb.vec_id AS id_b,
        round(list_inner_product(a.v, bb.v) /
              sqrt(list_inner_product(a.v, a.v) *
@@ -381,7 +369,7 @@ def q_dedup_embedding_cosine_capped(
 
 ORACLE_DEDUP_EMBEDDING_COSINE_CAPPED = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-b AS (SELECT vec_id, v, {_lsh_bucket_sql('v')} AS bucket FROM e),
+b AS (SELECT vec_id, v, {lsh_bucket_sql('v', _COS_BITS, _EMB_DIM)} AS bucket FROM e),
 sz AS (SELECT bucket, count(*) AS n FROM b GROUP BY bucket),
 cap AS (SELECT greatest({_COS_CAP_FLOOR}, count(*) // {_COS_CAP_FRAC}) AS c
         FROM e),
@@ -471,7 +459,10 @@ def q_stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     applyInPandasWithState surface from the build brief)."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from fink_science_spark.streaming.shell import scoped_shuffle_partitions
+    from fink_science_spark.streaming.shell import (
+        run_to_memory,
+        scoped_shuffle_partitions,
+    )
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = _t(spark, sf_dir, "events").schema
@@ -509,23 +500,17 @@ def q_stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 timeoutConf=GroupStateTimeout.NoTimeout,
             )
         )
-        name = f"stateful_{uuid.uuid4().hex[:8]}"
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+        sink = run_to_memory(
+            out, f"stateful_{uuid.uuid4().hex[:8]}", spark,
+            output_mode="update",
         )
-        q.awaitTermination()
     # update-mode memory sink may hold one row per state update; keep the
     # final state per user (max n is the last emission)
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("user_id").orderBy(F.col("n").desc())
     return (
-        spark.table(name)
-        .withColumn("__rn", F.row_number().over(w))
+        sink.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .select("user_id", "n", "max_value")
     )
@@ -627,32 +612,23 @@ GROUP BY o_orderpriority
 """
 
 
-QUERIES_EXT2: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "crossmatch_sky": q_crossmatch_sky,
-    "group_features": q_group_features,
-    "trapezoid_fluence": q_trapezoid_fluence,
-    "decode_csv": q_decode_csv,
-    "json_struct_decode": q_json_struct_decode,
-    "scalar_kitchen_sink": q_scalar_kitchen_sink,
-    "dedup_embedding_cosine": q_dedup_embedding_cosine,
-    "dedup_embedding_cosine_capped": q_dedup_embedding_cosine_capped,
-    "alert_enrichment": q_alert_enrichment,
-    "stream_sliding_counts": q_stream_sliding_counts,
-    "stream_stateful_user_stats": q_stream_stateful_user_stats,
-    "sink_roundtrip": q_sink_roundtrip,
-}
-
-ORACLES_EXT2: dict[str, str] = {
-    "crossmatch_sky": ORACLE_CROSSMATCH_SKY,
-    "group_features": ORACLE_GROUP_FEATURES,
-    "trapezoid_fluence": ORACLE_TRAPEZOID_FLUENCE,
-    "decode_csv": ORACLE_DECODE_CSV,
-    "json_struct_decode": ORACLE_JSON_STRUCT_DECODE,
-    "scalar_kitchen_sink": ORACLE_SCALAR_KITCHEN_SINK,
-    "dedup_embedding_cosine": ORACLE_DEDUP_EMBEDDING_COSINE,
-    "dedup_embedding_cosine_capped": ORACLE_DEDUP_EMBEDDING_COSINE_CAPPED,
-    "alert_enrichment": ORACLE_ALERT_ENRICHMENT,
-    "stream_sliding_counts": ORACLE_STREAM_SLIDING_COUNTS,
-    "stream_stateful_user_stats": ORACLE_STREAM_STATEFUL_USER_STATS,
-    "sink_roundtrip": ORACLE_SINK_ROUNDTRIP,
-}
+register("crossmatch_sky", q_crossmatch_sky, ORACLE_CROSSMATCH_SKY)
+register("group_features", q_group_features, ORACLE_GROUP_FEATURES)
+register("trapezoid_fluence", q_trapezoid_fluence, ORACLE_TRAPEZOID_FLUENCE)
+register("decode_csv", q_decode_csv, ORACLE_DECODE_CSV, bench=False)
+register("json_struct_decode", q_json_struct_decode, ORACLE_JSON_STRUCT_DECODE,
+         bench=False)
+register("scalar_kitchen_sink", q_scalar_kitchen_sink,
+         ORACLE_SCALAR_KITCHEN_SINK, bench=False)
+register("dedup_embedding_cosine", q_dedup_embedding_cosine,
+         ORACLE_DEDUP_EMBEDDING_COSINE)
+register("dedup_embedding_cosine_capped", q_dedup_embedding_cosine_capped,
+         ORACLE_DEDUP_EMBEDDING_COSINE_CAPPED)
+register("alert_enrichment", q_alert_enrichment, ORACLE_ALERT_ENRICHMENT,
+         bench=False)
+register("stream_sliding_counts", q_stream_sliding_counts,
+         ORACLE_STREAM_SLIDING_COUNTS)
+register("stream_stateful_user_stats", q_stream_stateful_user_stats,
+         ORACLE_STREAM_STATEFUL_USER_STATS)
+register("sink_roundtrip", q_sink_roundtrip, ORACLE_SINK_ROUNDTRIP,
+         bench=False)

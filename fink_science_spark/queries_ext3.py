@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import os
 import uuid
-from typing import Callable
 
 import pandas as pd
 
@@ -21,6 +20,7 @@ from fink_science_spark.functions.hashing import hash64, hash64_sql
 from fink_science_spark.functions.text import tokens, tokens_sql, word_shingles, word_shingles_sql
 from fink_science_spark.operators.similarity import ivf_topk_blocked
 from fink_science_spark.queries import _events_us, _fan_out, _t, _ts_event_col
+from fink_science_spark.registry import register
 
 DAY_US = 24 * 3600 * 1_000_000
 
@@ -850,28 +850,17 @@ FROM wins
 """
 
 
-QUERIES_EXT3: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "ann_ivf_topk": q_ann_ivf_topk,
-    "stream_session_windows": q_stream_session_windows,
-    "stream_static_join": q_stream_static_join,
-    "alert_rule_flags": q_alert_rule_flags,
-    "standardized_value": q_standardized_value,
-    "extreme_state_ratio": q_extreme_state_ratio,
-    "doc_winnowing": q_doc_winnowing,
-    "bpe_token_count": q_bpe_token_count,
-    "alert_pipeline": q_alert_pipeline,
-    "band_features": q_band_features,
-}
-
-ORACLES_EXT3: dict[str, str] = {
-    "ann_ivf_topk": ORACLE_ANN_IVF_TOPK,
-    "stream_session_windows": ORACLE_STREAM_SESSION_WINDOWS,
-    "stream_static_join": ORACLE_STREAM_STATIC_JOIN,
-    "alert_rule_flags": ORACLE_ALERT_RULE_FLAGS,
-    "standardized_value": ORACLE_STANDARDIZED_VALUE,
-    "extreme_state_ratio": ORACLE_EXTREME_STATE_RATIO,
-    "doc_winnowing": ORACLE_DOC_WINNOWING,
-    "bpe_token_count": _oracle_bpe_token_count(),
-    "alert_pipeline": ORACLE_ALERT_PIPELINE,
-    "band_features": _oracle_band_features(),
-}
+register("ann_ivf_topk", q_ann_ivf_topk, ORACLE_ANN_IVF_TOPK)
+register("stream_session_windows", q_stream_session_windows,
+         ORACLE_STREAM_SESSION_WINDOWS)
+register("stream_static_join", q_stream_static_join, ORACLE_STREAM_STATIC_JOIN,
+         bench=False)
+register("alert_rule_flags", q_alert_rule_flags, ORACLE_ALERT_RULE_FLAGS)
+register("standardized_value", q_standardized_value, ORACLE_STANDARDIZED_VALUE,
+         bench=False)
+register("extreme_state_ratio", q_extreme_state_ratio,
+         ORACLE_EXTREME_STATE_RATIO, bench=False)
+register("doc_winnowing", q_doc_winnowing, ORACLE_DOC_WINNOWING)
+register("bpe_token_count", q_bpe_token_count, _oracle_bpe_token_count())
+register("alert_pipeline", q_alert_pipeline, ORACLE_ALERT_PIPELINE)
+register("band_features", q_band_features, _oracle_band_features())

@@ -11,7 +11,6 @@ rows-only by design).
 from __future__ import annotations
 
 import os
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -20,6 +19,7 @@ from fink_science_spark.operators.remote import local_table_resolver, service_xm
 from fink_science_spark.queries import _events_us, _fan_out, _t
 
 from fink_science_spark.queries_ext2 import _SCRATCH
+from fink_science_spark.registry import register
 _XMATCH_RADIUS = 10.0
 
 
@@ -718,44 +718,32 @@ def q_sampled_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_EXT4: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "remote_xmatch": q_remote_xmatch,
-    "bucketed_join": q_bucketed_join,
-    "partitioned_scan": q_partitioned_scan,
-    "promo_revenue": q_promo_revenue,
-    "sql_string_filter": q_sql_string_filter,
-    "map_ops": q_map_ops,
-    "sampled_stats": q_sampled_stats,
-    "asof_click_before_purchase": q_asof_click_before_purchase,
-    "remote_xmatch_nullsem": q_remote_xmatch_nullsem,
-    "skew_safe_distinct": q_skew_safe_distinct,
-    "approx_distinct": q_approx_distinct,
-    "stream_foreachbatch_enrich": q_stream_foreachbatch_enrich,
-    "image_stats": q_image_stats,
-    "rollup_counts": q_rollup_counts,
-    "pivot_counts": q_pivot_counts,
-    "ranking_windows": q_ranking_windows,
-    "lookback_with_limits": q_lookback_with_limits,
-    "salted_type_join": q_salted_type_join,
-}
-
-ORACLES_EXT4: dict[str, str] = {
-    "remote_xmatch": ORACLE_REMOTE_XMATCH,
-    "bucketed_join": ORACLE_BUCKETED_JOIN,
-    "partitioned_scan": ORACLE_PARTITIONED_SCAN,
-    "promo_revenue": ORACLE_PROMO_REVENUE,
-    "sql_string_filter": ORACLE_SQL_STRING_FILTER,
-    "map_ops": ORACLE_MAP_OPS,
-    # sampled_stats: engine-specific seeded sampler — rows-only by design
-    "asof_click_before_purchase": ORACLE_ASOF_CLICK,
-    "remote_xmatch_nullsem": ORACLE_REMOTE_XMATCH_NULLSEM,
-    "skew_safe_distinct": ORACLE_SKEW_SAFE_DISTINCT,
-    # approx_distinct: HLL sketch is engine-specific — rows-only by design
-    "stream_foreachbatch_enrich": ORACLE_STREAM_FOREACHBATCH,
-    "image_stats": ORACLE_IMAGE_STATS,
-    "rollup_counts": ORACLE_ROLLUP_COUNTS,
-    "pivot_counts": ORACLE_PIVOT_COUNTS,
-    "ranking_windows": ORACLE_RANKING_WINDOWS,
-    "lookback_with_limits": ORACLE_LOOKBACK_WITH_LIMITS,
-    "salted_type_join": ORACLE_SALTED_TYPE_JOIN,
-}
+register("remote_xmatch", q_remote_xmatch, ORACLE_REMOTE_XMATCH)
+register("bucketed_join", q_bucketed_join, ORACLE_BUCKETED_JOIN, bench=False)
+register("partitioned_scan", q_partitioned_scan, ORACLE_PARTITIONED_SCAN,
+         bench=False)
+register("promo_revenue", q_promo_revenue, ORACLE_PROMO_REVENUE)
+register("sql_string_filter", q_sql_string_filter, ORACLE_SQL_STRING_FILTER,
+         bench=False)
+register("map_ops", q_map_ops, ORACLE_MAP_OPS, bench=False)
+# sampled_stats: engine-specific seeded sampler — rows-only by design
+register("sampled_stats", q_sampled_stats, bench=False)
+register("asof_click_before_purchase", q_asof_click_before_purchase,
+         ORACLE_ASOF_CLICK)
+register("remote_xmatch_nullsem", q_remote_xmatch_nullsem,
+         ORACLE_REMOTE_XMATCH_NULLSEM, bench=False)
+register("skew_safe_distinct", q_skew_safe_distinct, ORACLE_SKEW_SAFE_DISTINCT,
+         bench=False)
+# approx_distinct: HLL sketch is engine-specific — rows-only by design
+register("approx_distinct", q_approx_distinct, bench=False)
+register("stream_foreachbatch_enrich", q_stream_foreachbatch_enrich,
+         ORACLE_STREAM_FOREACHBATCH)
+register("image_stats", q_image_stats, ORACLE_IMAGE_STATS)
+register("rollup_counts", q_rollup_counts, ORACLE_ROLLUP_COUNTS, bench=False)
+register("pivot_counts", q_pivot_counts, ORACLE_PIVOT_COUNTS, bench=False)
+register("ranking_windows", q_ranking_windows, ORACLE_RANKING_WINDOWS,
+         bench=False)
+register("lookback_with_limits", q_lookback_with_limits,
+         ORACLE_LOOKBACK_WITH_LIMITS, bench=False)
+register("salted_type_join", q_salted_type_join, ORACLE_SALTED_TYPE_JOIN,
+         bench=False)

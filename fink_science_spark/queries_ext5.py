@@ -6,12 +6,11 @@ called for — each with a bit-portable DuckDB oracle.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fink_science_spark.queries import _events_us, _fan_out, _t, _ts_event_col
+from fink_science_spark.registry import register
 
 # --------------------------------------------------------------------------
 # §2.8 model scoring: frozen-weight MLP, end-to-end (closes the one "no"
@@ -820,28 +819,16 @@ WHERE inter * 1.0 / (na + nb - inter) >= 0.5
 """
 
 
-QUERIES_EXT5: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "model_score": q_model_score,
-    "model_score_forest": q_model_score_forest,
-    "ssoft_hg_fit": q_ssoft_hg_fit,
-    "ssoft_hg1g2_fit": q_ssoft_hg1g2_fit,
-    "dedup_ngram_jaccard_capped": q_dedup_ngram_jaccard_capped,
-    "dedup_incremental": q_dedup_incremental,
-    "stream_dedup": q_stream_dedup,
-    "photometry_conversion": q_photometry_conversion,
-    "pii_redact": q_pii_redact,
-    "doc_repetition": q_doc_repetition,
-}
-
-ORACLES_EXT5: dict[str, str] = {
-    "model_score": _oracle_model_score(),
-    "model_score_forest": _oracle_model_score_forest(),
-    "ssoft_hg_fit": _oracle_ssoft_hg_fit(),
-    "ssoft_hg1g2_fit": _oracle_ssoft_hg1g2_fit(),
-    "dedup_ngram_jaccard_capped": _oracle_dedup_ngram_jaccard_capped(),
-    "dedup_incremental": _oracle_dedup_incremental(),
-    "stream_dedup": ORACLE_STREAM_DEDUP,
-    "photometry_conversion": _oracle_photometry_conversion(),
-    "pii_redact": _oracle_pii_redact(),
-    "doc_repetition": _oracle_doc_repetition(),
-}
+register("model_score", q_model_score, _oracle_model_score())
+register("model_score_forest", q_model_score_forest,
+         _oracle_model_score_forest())
+register("ssoft_hg_fit", q_ssoft_hg_fit, _oracle_ssoft_hg_fit())
+register("ssoft_hg1g2_fit", q_ssoft_hg1g2_fit, _oracle_ssoft_hg1g2_fit())
+register("dedup_ngram_jaccard_capped", q_dedup_ngram_jaccard_capped,
+         _oracle_dedup_ngram_jaccard_capped())
+register("dedup_incremental", q_dedup_incremental, _oracle_dedup_incremental())
+register("stream_dedup", q_stream_dedup, ORACLE_STREAM_DEDUP)
+register("photometry_conversion", q_photometry_conversion,
+         _oracle_photometry_conversion())
+register("pii_redact", q_pii_redact, _oracle_pii_redact())
+register("doc_repetition", q_doc_repetition, _oracle_doc_repetition())

@@ -14,8 +14,6 @@ vocabulary-sized IDF table, a one-row corpus count).
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -27,6 +25,7 @@ from fink_science_spark.functions.text import (
     word_shingles_sql,
 )
 from fink_science_spark.queries import _events_us, _fan_out, _t
+from fink_science_spark.registry import register
 
 # --------------------------------------------------------------------------
 # Benchmark decontamination (n-gram overlap against an eval split)
@@ -494,7 +493,10 @@ def q_stream_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from fink_science_spark.streaming.shell import scoped_shuffle_partitions
+    from fink_science_spark.streaming.shell import (
+        run_to_memory,
+        scoped_shuffle_partitions,
+    )
 
     schema = spark.read.parquet(_os.path.join(sf_dir, "documents.parquet")).schema
 
@@ -544,16 +546,11 @@ def q_stream_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        name = f"packstream_{_uuid.uuid4().hex[:8]}"
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        sink = run_to_memory(
+            out, f"packstream_{_uuid.uuid4().hex[:8]}", spark,
+            output_mode="append",
         )
-        q.awaitTermination()
-    return spark.table(name).select(
+    return sink.select(
         "doc_id", "shard", "bin_id", "n_tokens", "pos_in_bin"
     )
 
@@ -1203,43 +1200,25 @@ WHERE g.i < nc
 """
 
 
-QUERIES_EXT6: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "decontaminate": q_decontaminate,
-    "train_shard_assign": q_train_shard_assign,
-    "sequence_packing": q_sequence_packing,
-    "tfidf_topk": q_tfidf_topk,
-    "domain_mix_sample": q_domain_mix_sample,
-    "color_features": q_color_features,
-    "stream_sequence_packing": q_stream_sequence_packing,
-    "stream_interval_join": q_stream_interval_join,
-    "dedup_spans": q_dedup_spans,
-    "quality_classifier": q_quality_classifier,
-    "host_curation": q_host_curation,
-    "corpus_datacard": q_corpus_datacard,
-    "embedding_centroids": q_embedding_centroids,
-    "audio_frame_energy": q_audio_frame_energy,
-    "scd2_history": q_scd2_history,
-    "curated_corpus": q_curated_corpus,
-    "doc_chunks": q_doc_chunks,
-}
-
-ORACLES_EXT6: dict[str, str] = {
-    "decontaminate": ORACLE_DECONTAMINATE,
-    "train_shard_assign": ORACLE_TRAIN_SHARD_ASSIGN,
-    "sequence_packing": ORACLE_SEQUENCE_PACKING,
-    "tfidf_topk": ORACLE_TFIDF_TOPK,
-    "domain_mix_sample": ORACLE_DOMAIN_MIX_SAMPLE,
-    "color_features": ORACLE_COLOR_FEATURES,
-    # the batch packing SQL IS the streaming oracle (stream/batch parity)
-    "stream_sequence_packing": ORACLE_SEQUENCE_PACKING,
-    "stream_interval_join": ORACLE_STREAM_INTERVAL_JOIN,
-    "dedup_spans": ORACLE_DEDUP_SPANS,
-    "quality_classifier": _oracle_quality_classifier(),
-    "host_curation": ORACLE_HOST_CURATION,
-    "corpus_datacard": ORACLE_CORPUS_DATACARD,
-    "embedding_centroids": ORACLE_EMBEDDING_CENTROIDS,
-    "audio_frame_energy": ORACLE_AUDIO_FRAME_ENERGY,
-    "scd2_history": ORACLE_SCD2_HISTORY,
-    "curated_corpus": _oracle_curated_corpus(),
-    "doc_chunks": ORACLE_DOC_CHUNKS,
-}
+register("decontaminate", q_decontaminate, ORACLE_DECONTAMINATE)
+register("train_shard_assign", q_train_shard_assign, ORACLE_TRAIN_SHARD_ASSIGN)
+register("sequence_packing", q_sequence_packing, ORACLE_SEQUENCE_PACKING)
+register("tfidf_topk", q_tfidf_topk, ORACLE_TFIDF_TOPK)
+register("domain_mix_sample", q_domain_mix_sample, ORACLE_DOMAIN_MIX_SAMPLE)
+register("color_features", q_color_features, ORACLE_COLOR_FEATURES)
+# the batch packing SQL IS the streaming oracle (stream/batch parity)
+register("stream_sequence_packing", q_stream_sequence_packing,
+         ORACLE_SEQUENCE_PACKING)
+register("stream_interval_join", q_stream_interval_join,
+         ORACLE_STREAM_INTERVAL_JOIN)
+register("dedup_spans", q_dedup_spans, ORACLE_DEDUP_SPANS)
+register("quality_classifier", q_quality_classifier,
+         _oracle_quality_classifier())
+register("host_curation", q_host_curation, ORACLE_HOST_CURATION)
+register("corpus_datacard", q_corpus_datacard, ORACLE_CORPUS_DATACARD)
+register("embedding_centroids", q_embedding_centroids,
+         ORACLE_EMBEDDING_CENTROIDS)
+register("audio_frame_energy", q_audio_frame_energy, ORACLE_AUDIO_FRAME_ENERGY)
+register("scd2_history", q_scd2_history, ORACLE_SCD2_HISTORY)
+register("curated_corpus", q_curated_corpus, _oracle_curated_corpus())
+register("doc_chunks", q_doc_chunks, ORACLE_DOC_CHUNKS)

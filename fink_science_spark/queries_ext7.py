@@ -7,8 +7,6 @@ power spectrum) — each Spark-first with a bit-portable DuckDB oracle.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,6 +32,7 @@ from fink_science_spark.queries_ext2 import (
     _ra,
     _ra_sql,
 )
+from fink_science_spark.registry import register
 
 # --------------------------------------------------------------------------
 # crossmatch_mangrove: 1-NN sky join returning a catalog PAYLOAD MAP with
@@ -376,16 +375,8 @@ FROM n
 """
 
 
-QUERIES_EXT7: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "crossmatch_mangrove": q_crossmatch_mangrove,
-    "anomaly_score": q_anomaly_score,
-    "ks_source_drift": q_ks_source_drift,
-    "power_spectrum": q_power_spectrum,
-}
-
-ORACLES_EXT7: dict[str, str] = {
-    "crossmatch_mangrove": ORACLE_CROSSMATCH_MANGROVE,
-    "anomaly_score": _oracle_anomaly_score(),
-    "ks_source_drift": ORACLE_KS_SOURCE_DRIFT,
-    "power_spectrum": _oracle_power_spectrum(),
-}
+register("crossmatch_mangrove", q_crossmatch_mangrove,
+         ORACLE_CROSSMATCH_MANGROVE)
+register("anomaly_score", q_anomaly_score, _oracle_anomaly_score())
+register("ks_source_drift", q_ks_source_drift, ORACLE_KS_SOURCE_DRIFT)
+register("power_spectrum", q_power_spectrum, _oracle_power_spectrum())

@@ -7,8 +7,6 @@ period scan as a native sufficient-statistics aggregation.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -22,6 +20,7 @@ from fink_science_spark.operators.period import (
     period_scan_sql,
 )
 from fink_science_spark.queries import _events_us, _t
+from fink_science_spark.registry import register
 
 # Days between the unix epoch and 2024-01-01 UTC: rebases event times so
 # trig arguments stay O(10²) (identical constant in both engines).
@@ -907,19 +906,6 @@ def q_stream_avro_alert_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 
-QUERIES_EXT8: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "period_scan": q_period_scan,
-    "kn_score": q_kn_score,
-    "cats_broad_scores": q_cats_broad_scores,
-    "superluminous_sentinel": q_superluminous_sentinel,
-    "replay_scan": q_replay_scan,
-    "stream_replay_counts": q_stream_replay_counts,
-    "avro_scan": q_avro_scan,
-    "stream_avro_counts": q_stream_avro_counts,
-    "fits_catalog_join": q_fits_catalog_join,
-    "stream_avro_alert_pipeline": q_stream_avro_alert_pipeline,
-}
-
 
 def _oracle_stream_avro_alert_pipeline() -> str:
     # the batch alert-enrichment oracle IS the streaming-Avro oracle:
@@ -929,15 +915,16 @@ def _oracle_stream_avro_alert_pipeline() -> str:
     return ORACLE_ALERT_ENRICHMENT
 
 
-ORACLES_EXT8: dict[str, str] = {
-    "period_scan": ORACLE_PERIOD_SCAN,
-    "kn_score": ORACLE_KN_SCORE,
-    "cats_broad_scores": ORACLE_CATS_BROAD_SCORES,
-    "superluminous_sentinel": ORACLE_SUPERLUMINOUS,
-    "replay_scan": ORACLE_REPLAY_SCAN,
-    "stream_replay_counts": ORACLE_STREAM_REPLAY_COUNTS,
-    "avro_scan": ORACLE_AVRO_SCAN,
-    "stream_avro_counts": ORACLE_STREAM_AVRO_COUNTS,
-    "fits_catalog_join": ORACLE_FITS_CATALOG_JOIN,
-    "stream_avro_alert_pipeline": _oracle_stream_avro_alert_pipeline(),
-}
+register("period_scan", q_period_scan, ORACLE_PERIOD_SCAN)
+register("kn_score", q_kn_score, ORACLE_KN_SCORE)
+register("cats_broad_scores", q_cats_broad_scores, ORACLE_CATS_BROAD_SCORES)
+register("superluminous_sentinel", q_superluminous_sentinel,
+         ORACLE_SUPERLUMINOUS)
+register("replay_scan", q_replay_scan, ORACLE_REPLAY_SCAN, bench=False)
+register("stream_replay_counts", q_stream_replay_counts,
+         ORACLE_STREAM_REPLAY_COUNTS, bench=False)
+register("avro_scan", q_avro_scan, ORACLE_AVRO_SCAN)
+register("stream_avro_counts", q_stream_avro_counts, ORACLE_STREAM_AVRO_COUNTS)
+register("fits_catalog_join", q_fits_catalog_join, ORACLE_FITS_CATALOG_JOIN)
+register("stream_avro_alert_pipeline", q_stream_avro_alert_pipeline,
+         _oracle_stream_avro_alert_pipeline())

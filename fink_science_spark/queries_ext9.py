@@ -19,8 +19,6 @@ pandas UDF, partition-aware UDTF).
 
 from __future__ import annotations
 
-from typing import Callable
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,6 +44,7 @@ from fink_science_spark.operators.spatial import (
     parent_pixel_sql,
 )
 from fink_science_spark.queries import _events_us, _fan_out, _t
+from fink_science_spark.registry import register
 
 # --------------------------------------------------------------------------
 # mulens_score: microlensing-module lifecycle.
@@ -1984,11 +1983,12 @@ def q_knn_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_knn_graph() -> str:
-    from fink_science_spark.queries_ext2 import _lsh_bucket_sql
+    from fink_science_spark.operators.similarity import lsh_bucket_sql
+    from fink_science_spark.queries_ext2 import _COS_BITS, _EMB_DIM
 
     return f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings),
-b AS (SELECT vec_id, v, {_lsh_bucket_sql('v')} AS bucket FROM e),
+b AS (SELECT vec_id, v, {lsh_bucket_sql('v', _COS_BITS, _EMB_DIM)} AS bucket FROM e),
 pairs AS (
   SELECT a.vec_id AS id_a, bb.vec_id AS id_b
   FROM b a JOIN b bb
@@ -2078,54 +2078,27 @@ ORACLE_EVAL_SPLIT = _oracle_eval_split()
 
 # --------------------------------------------------------------------------
 
-QUERIES_EXT9: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "mulens_score": q_mulens_score,
-    "orphan_score": q_orphan_score,
-    "sky_pixel_rollup": q_sky_pixel_rollup,
-    "snn_ia_score": q_snn_ia_score,
-    "ann_rerank": q_ann_rerank,
-    "host_pagerank": q_host_pagerank,
-    "sky_pixel_multires": q_sky_pixel_multires,
-    "zorder_cells": q_zorder_cells,
-    "incremental_agg": q_incremental_agg,
-    "bpe_train": q_bpe_train,
-    "evolved_scan": q_evolved_scan,
-    "stream_mv_maintenance": q_stream_mv_maintenance,
-    "trimmed_mean": q_trimmed_mean,
-    "udtf_sessions": q_udtf_sessions,
-    "variant_stats": q_variant_stats,
-    "recursive_reach": q_recursive_reach,
-    "arrow_byte_profile": q_arrow_byte_profile,
-    "temporal_dim_join": q_temporal_dim_join,
-    "cube_counts": q_cube_counts,
-    "unpivot_metrics": q_unpivot_metrics,
-    "bpe_encode_stats": q_bpe_encode_stats,
-    "knn_graph_stats": q_knn_graph_stats,
-    "eval_split": q_eval_split,
-}
-
-ORACLES_EXT9: dict[str, str] = {
-    "mulens_score": ORACLE_MULENS_SCORE,
-    "orphan_score": ORACLE_ORPHAN_SCORE,
-    "sky_pixel_rollup": ORACLE_SKY_PIXEL_ROLLUP,
-    "snn_ia_score": ORACLE_SNN_IA_SCORE,
-    "ann_rerank": ORACLE_ANN_RERANK,
-    "host_pagerank": ORACLE_HOST_PAGERANK,
-    "sky_pixel_multires": ORACLE_SKY_PIXEL_MULTIRES,
-    "zorder_cells": ORACLE_ZORDER_CELLS,
-    "incremental_agg": ORACLE_INCREMENTAL_AGG,
-    "bpe_train": ORACLE_BPE_TRAIN,
-    "evolved_scan": ORACLE_EVOLVED_SCAN,
-    "stream_mv_maintenance": ORACLE_STREAM_MV_MAINTENANCE,
-    "trimmed_mean": ORACLE_TRIMMED_MEAN,
-    "udtf_sessions": ORACLE_UDTF_SESSIONS,
-    "variant_stats": ORACLE_VARIANT_STATS,
-    "recursive_reach": ORACLE_RECURSIVE_REACH,
-    "arrow_byte_profile": ORACLE_ARROW_BYTE_PROFILE,
-    "temporal_dim_join": ORACLE_TEMPORAL_DIM_JOIN,
-    "cube_counts": ORACLE_CUBE_COUNTS,
-    "unpivot_metrics": ORACLE_UNPIVOT_METRICS,
-    "bpe_encode_stats": ORACLE_BPE_ENCODE_STATS,
-    "knn_graph_stats": ORACLE_KNN_GRAPH_STATS,
-    "eval_split": ORACLE_EVAL_SPLIT,
-}
+register("mulens_score", q_mulens_score, ORACLE_MULENS_SCORE)
+register("orphan_score", q_orphan_score, ORACLE_ORPHAN_SCORE)
+register("sky_pixel_rollup", q_sky_pixel_rollup, ORACLE_SKY_PIXEL_ROLLUP)
+register("snn_ia_score", q_snn_ia_score, ORACLE_SNN_IA_SCORE)
+register("ann_rerank", q_ann_rerank, ORACLE_ANN_RERANK)
+register("host_pagerank", q_host_pagerank, ORACLE_HOST_PAGERANK)
+register("sky_pixel_multires", q_sky_pixel_multires, ORACLE_SKY_PIXEL_MULTIRES)
+register("zorder_cells", q_zorder_cells, ORACLE_ZORDER_CELLS)
+register("incremental_agg", q_incremental_agg, ORACLE_INCREMENTAL_AGG)
+register("bpe_train", q_bpe_train, ORACLE_BPE_TRAIN)
+register("evolved_scan", q_evolved_scan, ORACLE_EVOLVED_SCAN)
+register("stream_mv_maintenance", q_stream_mv_maintenance,
+         ORACLE_STREAM_MV_MAINTENANCE)
+register("trimmed_mean", q_trimmed_mean, ORACLE_TRIMMED_MEAN)
+register("udtf_sessions", q_udtf_sessions, ORACLE_UDTF_SESSIONS)
+register("variant_stats", q_variant_stats, ORACLE_VARIANT_STATS)
+register("recursive_reach", q_recursive_reach, ORACLE_RECURSIVE_REACH)
+register("arrow_byte_profile", q_arrow_byte_profile, ORACLE_ARROW_BYTE_PROFILE)
+register("temporal_dim_join", q_temporal_dim_join, ORACLE_TEMPORAL_DIM_JOIN)
+register("cube_counts", q_cube_counts, ORACLE_CUBE_COUNTS)
+register("unpivot_metrics", q_unpivot_metrics, ORACLE_UNPIVOT_METRICS)
+register("bpe_encode_stats", q_bpe_encode_stats, ORACLE_BPE_ENCODE_STATS)
+register("knn_graph_stats", q_knn_graph_stats, ORACLE_KNN_GRAPH_STATS)
+register("eval_split", q_eval_split, ORACLE_EVAL_SPLIT)

@@ -18,6 +18,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 # Fixed pre-touched heap (r8 optimization). Measured host property: lazy
@@ -175,6 +177,11 @@ def get_session(
         .config("spark.python.unix.domain.socket.enabled", "true")
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "268435456")
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "268435456")
+        # Python workers unpickle UDFs that reference this package's
+        # kernels by module path; a driver started outside the checkout
+        # has the package on its own sys.path only, so give the workers
+        # the directory that holds it.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     # Ephemeral scratch on the fastest device (guide §6): shuffle files,
     # spill and streaming temp checkpoints are per-run intermediates, and

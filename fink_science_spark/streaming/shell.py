@@ -121,7 +121,11 @@ def run_to_memory(
     """Execute a streaming frame with an availableNow trigger into a memory
     sink and return the completed static result — used by tests and the
     correctness harness to check stream/batch parity. Stream-stream joins
-    only support append mode; aggregations here use complete."""
+    only support append mode; aggregations here use complete.
+
+    The sink's temp view is dropped before returning: the returned frame
+    still reads the sink, but the session catalog no longer holds it, so
+    the rows live only as long as the caller keeps the frame."""
     q = (
         stream_result.writeStream.format("memory")
         .queryName(query_name)
@@ -130,7 +134,9 @@ def run_to_memory(
         .start()
     )
     q.awaitTermination()
-    return spark.table(query_name)
+    result = spark.table(query_name)
+    spark.catalog.dropTempView(query_name)
+    return result
 
 
 def interval_join_streams(

@@ -9,6 +9,16 @@ import pytest
 from pyspark.sql import functions as F
 
 
+def _queries_of(*modules):
+    """The registered queries defined in the given query modules."""
+    import __spark_entry__ as entrymod
+
+    names = {f"fink_science_spark.{m}" for m in modules}
+    return {
+        n: q for n, q in entrymod.queries().items() if q.__module__ in names
+    }
+
+
 @pytest.fixture()
 def empty_docs(spark):
     return spark.createDataFrame([], "doc_id long, shingles array<string>")
@@ -329,8 +339,6 @@ def test_median_bracket_empty(spark, tmp_path):
 def test_wave14_queries_empty(spark, tmp_path):
     """Every wave-14 query must return an empty (or zero-count) frame on
     empty inputs — none of them may crash on a null stats row."""
-    import fink_science_spark.queries_ext13 as x
-
     d = str(tmp_path / "w14_empty")
     schemas = {
         "documents": "doc_id long, text string, lang string, source string,"
@@ -347,7 +355,7 @@ def test_wave14_queries_empty(spark, tmp_path):
         spark.createDataFrame([], s).write.mode("overwrite").parquet(
             f"{d}/{t}.parquet"
         )
-    for name, q in x.QUERIES_EXT13.items():
+    for name, q in _queries_of("queries_ext13").items():
         out = q(spark, d)
         if name == "fk_integrity_audit":
             # the audit reports one row per FK edge even on empty tables
@@ -428,10 +436,6 @@ def test_wave16_wave17_queries_empty(spark, tmp_path):
     crash on a null stats row, and the expected frame shape: empty for
     row-producing queries, a single all-null/zero row for the global
     scalar reductions."""
-    import fink_science_spark.queries_ext14 as w16
-    import fink_science_spark.queries_ext15 as w17
-    import fink_science_spark.queries_ext16 as w18
-
     d = str(tmp_path / "w16_empty")
     schemas = {
         "region": "r_regionkey int, r_name string",
@@ -458,11 +462,9 @@ def test_wave16_wave17_queries_empty(spark, tmp_path):
         )
     one_null_row = {"small_qty_revenue", "disjunctive_revenue",
                     "zipf_skew_fit"}
-    for name, q in {
-        **w16.QUERIES_EXT14,
-        **w17.QUERIES_EXT15,
-        **w18.QUERIES_EXT16,
-    }.items():
+    for name, q in _queries_of(
+        "queries_ext14", "queries_ext15", "queries_ext16"
+    ).items():
         out = q(spark, d)
         if name in one_null_row:
             rows = out.collect()

@@ -85,19 +85,22 @@ def test_no_exotic_types_in_any_oracle_result():
     )
 
 
-def test_bench_headline_names_resolve():
-    """Every bench.py HEADLINE entry must exist in the registry — the
-    bench loop silently skips unknown names, so a rename would quietly
-    drop the query from BENCH_r{N}.json instead of failing."""
+def test_query_registry():
+    """Each query is registered once: a second registration of a name
+    raises and leaves the registry as it was, every oracle belongs to a
+    registered builder, and the rows/s table names only bench queries."""
     import bench
+    from fink_science_spark import registry
 
-    registry = _registry()
-    missing = [n for n in bench.HEADLINE if n not in registry]
-    assert not missing, f"bench HEADLINE entries not in queries(): {missing}"
-    dupes = [n for n in set(bench.HEADLINE) if bench.HEADLINE.count(n) > 1]
-    assert not dupes, f"duplicate HEADLINE entries: {dupes}"
-    unscanned = [n for n in bench.SCAN_BOUND if n not in bench.HEADLINE]
-    assert not unscanned, f"SCAN_BOUND names outside HEADLINE: {unscanned}"
+    builders = registry.queries()
+    name = next(iter(builders))
+    with pytest.raises(ValueError, match="already registered"):
+        registry.register(name, lambda spark, sf_dir: None)
+    assert registry.queries() == builders
+    orphans = set(registry.oracle_sql()) - set(builders)
+    assert not orphans, f"oracles without a builder: {orphans}"
+    unscanned = set(bench.SCAN_BOUND) - set(registry.bench_names())
+    assert not unscanned, f"SCAN_BOUND names outside the bench: {unscanned}"
 
 
 def test_no_unbounded_topandas_in_query_modules():

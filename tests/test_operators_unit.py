@@ -305,16 +305,16 @@ def test_trained_ivf_recall_vs_brute_force(spark, sf_smoke):
     """Trained IVF (hash init + 2 Lloyd rounds, nprobe=2 of 8 cells) must
     recall well above the 2/8 random-cell-coverage baseline against the
     exact brute-force top-3. Deterministic end to end."""
-    from fink_science_spark.queries_ext import QUERIES_EXT
-    from fink_science_spark.queries_ext3 import QUERIES_EXT3
+    import __spark_entry__ as entrymod
 
+    queries = entrymod.queries()
     ivf = {
         (r["qid"], r["cid"])
-        for r in QUERIES_EXT3["ann_ivf_topk"](spark, sf_smoke).collect()
+        for r in queries["ann_ivf_topk"](spark, sf_smoke).collect()
     }
     brute = {
         (r["qid"], r["cid"])
-        for r in QUERIES_EXT["ann_cosine_topk"](spark, sf_smoke).collect()
+        for r in queries["ann_cosine_topk"](spark, sf_smoke).collect()
         if r["rank"] <= 3
     }
     recall = len(ivf & brute) / len(brute)

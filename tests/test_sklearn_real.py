@@ -243,8 +243,9 @@ def test_onnx_ensemble_matches_scalar_walk():
 def test_real_forest_queries_non_degenerate(spark, sf_smoke):
     """Constant outputs would vacuously pass hash parity — require
     spread in each real-model query's score column."""
-    from fink_science_spark.queries_ext17 import QUERIES_EXT17
+    import __spark_entry__ as entrymod
 
+    queries = entrymod.queries()
     for name, col in [
         ("mulens_real", "p_ml"),
         ("orphan_real", "p_orphan"),
@@ -258,7 +259,7 @@ def test_real_forest_queries_non_degenerate(spark, sf_smoke):
     ]:
         vals = [
             r[0]
-            for r in QUERIES_EXT17[name](spark, sf_smoke).select(col).collect()
+            for r in queries[name](spark, sf_smoke).select(col).collect()
         ]
         assert len(set(vals)) >= 3, f"{name}.{col} degenerate: {set(vals)}"
 

@@ -668,3 +668,23 @@ def test_replay_readers_restart_offsets_stay_monotonic(spark, tmp_path):
     assert parts == [] or all(p.start >= 90 for p in parts)
     nxt = fresh.latestOffset()
     assert nxt["row"] >= 90, nxt
+
+
+def test_memory_sinks_leave_the_catalog_flat(spark):
+    """Stream queries run into memory sinks; each sink's temp view must
+    be gone once the query returns, or every run leaves its rows in the
+    session catalog. The returned frames must still read the sink."""
+    import __spark_entry__ as entrymod
+
+    queries = entrymod.queries()
+    names = [
+        "stream_avro_alert_pipeline",
+        "stream_stateful_user_stats",
+        "stream_dedup",
+    ]
+    catalogs = []
+    for _ in range(3):
+        for name in names:
+            assert queries[name](spark, SF).count() > 0, name
+        catalogs.append(sorted(t.name for t in spark.catalog.listTables()))
+    assert catalogs[0] == catalogs[1] == catalogs[2], catalogs

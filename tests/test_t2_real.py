@@ -98,9 +98,9 @@ def test_t2_forward_sanity():
 
 
 def test_t2_query_spread(spark, sf_smoke):
-    from fink_science_spark.queries_ext17 import QUERIES_EXT17
+    import __spark_entry__ as entrymod
 
-    rows = QUERIES_EXT17["t2_real"](spark, sf_smoke).collect()
+    rows = entrymod.queries()["t2_real"](spark, sf_smoke).collect()
     assert len(rows) >= 1
     for r in rows:
         preds = r["preds"]
