@@ -35,6 +35,7 @@ from fink_science_spark.operators.aggregates import (
 )
 from fink_science_spark.operators.dedup import argmin_dedup
 from fink_science_spark.registry import register
+from fink_science_spark.streaming.shell import max_partition_bytes
 
 WEEK_US = 7 * 24 * 3600 * 1_000_000
 DAY_US = 24 * 3600 * 1_000_000
@@ -124,11 +125,7 @@ def _fan_out(
     if size is None:
         return df
     par = spark.sparkContext.defaultParallelism
-    try:
-        mpb = int(spark.conf.get("spark.sql.files.maxPartitionBytes", None)
-                  or (128 << 20))
-    except Exception:  # noqa: BLE001 - conf parse (e.g. "128m") -> default
-        mpb = 128 << 20
+    mpb = max_partition_bytes(spark)
     if size >= par * mpb:
         return df  # scan already saturates the cluster
     n = max(8, min(par, size // bytes_per_task + 1))

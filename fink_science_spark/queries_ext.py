@@ -49,7 +49,13 @@ from fink_science_spark.operators.spatial import (
     nearest_join_1d,
     range_count_join_1d,
 )
-from fink_science_spark.queries import _events_us, _fan_out, _t, _ts_event_col
+from fink_science_spark.queries import (
+    _events_us,
+    _fan_out,
+    _t,
+    _table_bytes,
+    _ts_event_col,
+)
 from fink_science_spark.registry import register
 
 # Shared oracle CTE: tokenized + 3-gram-shingled documents
@@ -756,18 +762,16 @@ def q_stream_weekly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Structured Streaming query (availableNow → memory sink), returning the
     completed result. The oracle is plain SQL — stream/batch parity is the
     check (SURVEY §2.9 / M6)."""
-    import os as _os
-
     from fink_science_spark.streaming.shell import (
         run_to_memory,
         scoped_shuffle_partitions,
+        state_partitions,
         windowed_counts,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = _os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
-    with scoped_shuffle_partitions(spark, 8):
+    schema = _t(spark, sf_dir, "events").schema
+    width = state_partitions(spark, _table_bytes(sf_dir, "events"))
+    with scoped_shuffle_partitions(spark, width):
         # file-stream sources require a directory: stream the sf_dir with a
         # glob pinned to the events table
         from fink_science_spark.streaming.shell import stream_table_load

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fink_science_spark.queries import _fan_out, _t
+from fink_science_spark.queries import _fan_out, _t, _table_bytes
 from fink_science_spark.queries_ext import (
     ORACLE_DEDUP_MINHASH_LSH as _ORACLE_MINHASH,
     ORACLE_DEDUP_NGRAM_JACCARD as _ORACLE_JACCARD,
@@ -701,6 +701,7 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fink_science_spark.streaming.shell import (
         run_to_memory,
         scoped_shuffle_partitions,
+        state_partitions,
     )
 
     schema = _t(spark, sf_dir, "documents").schema
@@ -712,7 +713,15 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.update((n,))
         yield pd.DataFrame({"token": [key[0]], "cnt": [n]})
 
-    with scoped_shuffle_partitions(spark, 8):
+    # the pandas update runs over every token row of its group, so its
+    # work grows with the source: one store per 2 MB of documents, the
+    # input _fan_out gives one Python task (measured on the x8 replica,
+    # 4 cores: width 1 5.2 s, 2 3.6 s, 4 3.0 s, 8 3.4 s; at sf0.1 one
+    # store is fastest, 1.6 s against 2.2 s at width 8)
+    width = state_partitions(
+        spark, _table_bytes(sf_dir, "documents"), bytes_per_store=2 << 20
+    )
+    with scoped_shuffle_partitions(spark, width):
         from fink_science_spark.streaming.shell import stream_table_load
 
         stream = stream_table_load(
@@ -1898,8 +1907,11 @@ def q_stream_dedup_lsh(
     # per-partition cost is dominated by state-store instance overhead
     # (commit files, provider setup), not Python work — a no-op stateful
     # stream floors at ~1.5 s with 4 partitions vs ~1.9 s with 8 and
-    # 9-12 s with 32 at sf0.1. On a real cluster scale this with group
-    # count, not core count.
+    # 9-12 s with 32 at sf0.1. Not state_partitions' width 1 either: the
+    # per-bucket pandas update is real work that a wider host spreads,
+    # and one store saves nothing here (measured at sf0.1 on a 4-core
+    # host: width 4 6.3-6.4 s, width 1 6.2-6.3 s). On a real cluster
+    # scale this with group count, not core count.
     n_part = n_state_partitions if n_state_partitions is not None else 4
     with scoped_shuffle_partitions(spark, n_part):
         from fink_science_spark.streaming.shell import stream_table_load

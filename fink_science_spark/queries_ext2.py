@@ -21,7 +21,13 @@ from fink_science_spark.functions.arrays import trapezoid_integral
 from fink_science_spark.operators.aggregates import fit_features_per_group
 from fink_science_spark.operators.similarity import lsh_bucket_sql
 from fink_science_spark.operators.spatial import nearest_join_sky
-from fink_science_spark.queries import _events_us, _fan_out, _t, _ts_event_col
+from fink_science_spark.queries import (
+    _events_us,
+    _fan_out,
+    _t,
+    _table_bytes,
+    _ts_event_col,
+)
 from fink_science_spark.registry import register
 
 DAY_US = 24 * 3600 * 1_000_000
@@ -399,11 +405,12 @@ def q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fink_science_spark.streaming.shell import (
         run_to_memory,
         scoped_shuffle_partitions,
+        state_partitions,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = _t(spark, sf_dir, "events").schema
-    with scoped_shuffle_partitions(spark, 8):
+    width = state_partitions(spark, _table_bytes(sf_dir, "events"))
+    with scoped_shuffle_partitions(spark, width):
         from fink_science_spark.streaming.shell import stream_table_load
 
         stream = stream_table_load(
@@ -478,6 +485,10 @@ def q_stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"user_id": [key[0]], "n": [n], "max_value": [round(vmax, 6)]}
         )
 
+    # explicit width, not state_partitions: the state operator runs a
+    # pandas function per user group, so it needs the cores more than
+    # fewer stores (measured at sf0.1, local[4]: width 8 3.1 s, width 1
+    # 6.4 s)
     with scoped_shuffle_partitions(spark, 8):
         from fink_science_spark.streaming.shell import stream_table_load
 

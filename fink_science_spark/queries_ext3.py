@@ -19,7 +19,13 @@ from pyspark.sql import functions as F
 from fink_science_spark.functions.hashing import hash64, hash64_sql
 from fink_science_spark.functions.text import tokens, tokens_sql, word_shingles, word_shingles_sql
 from fink_science_spark.operators.similarity import ivf_topk_blocked
-from fink_science_spark.queries import _events_us, _fan_out, _t, _ts_event_col
+from fink_science_spark.queries import (
+    _events_us,
+    _fan_out,
+    _t,
+    _table_bytes,
+    _ts_event_col,
+)
 from fink_science_spark.registry import register
 
 DAY_US = 24 * 3600 * 1_000_000
@@ -208,11 +214,12 @@ def q_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fink_science_spark.streaming.shell import (
         run_to_memory,
         scoped_shuffle_partitions,
+        state_partitions,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = _t(spark, sf_dir, "events").schema
-    with scoped_shuffle_partitions(spark, 8):
+    width = state_partitions(spark, _table_bytes(sf_dir, "events"))
+    with scoped_shuffle_partitions(spark, width):
         from fink_science_spark.streaming.shell import stream_table_load
 
         stream = stream_table_load(
@@ -275,11 +282,12 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fink_science_spark.streaming.shell import (
         run_to_memory,
         scoped_shuffle_partitions,
+        state_partitions,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = _t(spark, sf_dir, "events").schema
-    with scoped_shuffle_partitions(spark, 8):
+    width = state_partitions(spark, _table_bytes(sf_dir, "events"))
+    with scoped_shuffle_partitions(spark, width):
         from fink_science_spark.streaming.shell import stream_table_load
 
         stream = stream_table_load(

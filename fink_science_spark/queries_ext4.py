@@ -520,14 +520,13 @@ def q_stream_foreachbatch_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract."""
     import shutil
 
-    from fink_science_spark.streaming.shell import scoped_shuffle_partitions
+    from fink_science_spark.streaming.shell import stream_table_load
 
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     out_path = os.path.join(_SCRATCH, f"foreachbatch_{tag}")
     shutil.rmtree(out_path, ignore_errors=True)
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = _t(spark, sf_dir, "events").schema
+    events = _t(spark, sf_dir, "events")
 
     def enrich(batch_df: DataFrame) -> DataFrame:
         k = F.get_json_object("props", "$.k").cast("int")
@@ -543,26 +542,21 @@ def q_stream_foreachbatch_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     def process(batch_df: DataFrame, batch_id: int) -> None:
         enrich(batch_df).write.mode("append").parquet(out_path)
 
-    with scoped_shuffle_partitions(spark, 8):
-        from fink_science_spark.streaming.shell import stream_table_load
+    # per-batch enrichment holds no state: the session's width stands
+    stream = stream_table_load(
+        spark.readStream.schema(events.schema).format("parquet"),
+        sf_dir,
+        "events",
+    )
+    q = (
+        stream.writeStream.foreachBatch(process)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
-        stream = stream_table_load(
-
-            spark.readStream.schema(schema).format("parquet"),
-
-            sf_dir,
-
-            "events",
-
-        )
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    back = spark.read.parquet(out_path)
+    # the sink's schema is known: reading it back needs no inference job
+    back = spark.read.schema(enrich(events).schema).parquet(out_path)
     return back.groupBy("flag").agg(
         F.count("*").alias("n"),
         F.round(F.avg("k"), 6).alias("avg_k"),

@@ -9,7 +9,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fink_science_spark.queries import _events_us, _fan_out, _t, _ts_event_col
+from fink_science_spark.queries import (
+    _events_us,
+    _fan_out,
+    _t,
+    _table_bytes,
+    _ts_event_col,
+)
 from fink_science_spark.registry import register
 
 # --------------------------------------------------------------------------
@@ -585,17 +591,15 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the original table — stream dedup must make the double-delivery
     invisible. At 100 TB the dedup state is per-key in the state store,
     bounded by the watermark horizon."""
-    import os as _os
-
     from fink_science_spark.streaming.shell import (
         run_to_memory,
         scoped_shuffle_partitions,
+        state_partitions,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = _os.path.join(sf_dir, "events.parquet")
-    schema = spark.read.parquet(path).schema
-    with scoped_shuffle_partitions(spark, 8):
+    schema = _t(spark, sf_dir, "events").schema
+    width = state_partitions(spark, _table_bytes(sf_dir, "events"))
+    with scoped_shuffle_partitions(spark, width):
 
         def feed():
             from fink_science_spark.streaming.shell import stream_table_load

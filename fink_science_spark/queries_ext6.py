@@ -24,7 +24,7 @@ from fink_science_spark.functions.text import (
     word_shingles,
     word_shingles_sql,
 )
-from fink_science_spark.queries import _events_us, _fan_out, _t
+from fink_science_spark.queries import _events_us, _fan_out, _t, _table_bytes
 from fink_science_spark.registry import register
 
 # --------------------------------------------------------------------------
@@ -487,7 +487,6 @@ def q_stream_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches arrive in doc_id order (the append-log contract — same
     condition the incremental dedup documents).
     """
-    import os as _os
     import uuid as _uuid
 
     import pandas as pd
@@ -496,9 +495,11 @@ def q_stream_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fink_science_spark.streaming.shell import (
         run_to_memory,
         scoped_shuffle_partitions,
+        state_partitions,
     )
 
-    schema = spark.read.parquet(_os.path.join(sf_dir, "documents.parquet")).schema
+    schema = _t(spark, sf_dir, "documents").schema
+    width = state_partitions(spark, _table_bytes(sf_dir, "documents"))
 
     def update(key, pdfs, state: GroupState):
         cum, cur_bin, cur_pos = state.get if state.exists else (0, 0, 0)
@@ -518,7 +519,7 @@ def q_stream_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
             out_rows, columns=["doc_id", "shard", "bin_id", "n_tokens", "pos_in_bin"]
         )
 
-    with scoped_shuffle_partitions(spark, 8):
+    with scoped_shuffle_partitions(spark, width):
         from fink_science_spark.streaming.shell import stream_table_load
 
         stream = stream_table_load(
@@ -1044,19 +1045,18 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams forever. State is keyed by user_id — the same shuffle both
     sides already need — so the join costs exactly one exchange per input.
     """
-    import os as _os
     import uuid as _uuid
 
     from fink_science_spark.streaming.shell import (
         interval_join_streams,
         run_to_memory,
         scoped_shuffle_partitions,
+        state_partitions,
     )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(_os.path.join(sf_dir, "events.parquet")).schema
-
-    with scoped_shuffle_partitions(spark, 8):
+    schema = _t(spark, sf_dir, "events").schema
+    width = state_partitions(spark, _table_bytes(sf_dir, "events"))
+    with scoped_shuffle_partitions(spark, width):
 
         def feed(etype: str) -> DataFrame:
             from fink_science_spark.streaming.shell import stream_table_load

@@ -19,7 +19,7 @@ from fink_science_spark.operators.period import (
     period_scan_native,
     period_scan_sql,
 )
-from fink_science_spark.queries import _events_us, _t
+from fink_science_spark.queries import _events_us, _t, _table_bytes
 from fink_science_spark.registry import register
 
 # Days between the unix epoch and 2024-01-01 UTC: rebases event times so
@@ -529,10 +529,12 @@ def q_stream_replay_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fink_science_spark.streaming.shell import (
         run_to_memory,
         scoped_shuffle_partitions,
+        state_partitions,
     )
 
     register_replay_source(spark)
-    with scoped_shuffle_partitions(spark, 8):
+    width = state_partitions(spark, _table_bytes(sf_dir, "events"))
+    with scoped_shuffle_partitions(spark, width):
         stream = (
             spark.readStream.format("alert_replay")
             .option("path", _os.path.join(sf_dir, "events.parquet"))
@@ -722,6 +724,7 @@ def q_stream_avro_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fink_science_spark.streaming.shell import (
         run_to_memory,
         scoped_shuffle_partitions,
+        state_partitions,
     )
 
     register_avro_source(spark)
@@ -746,7 +749,10 @@ def q_stream_avro_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     _build_input_once(path, _build)
-    with scoped_shuffle_partitions(spark, 8):
+    # the container re-encodes three documents columns: size the state
+    # to the table it came from
+    width = state_partitions(spark, _table_bytes(sf_dir, "documents"))
+    with scoped_shuffle_partitions(spark, width):
         stream = (
             spark.readStream.format("avro_replay")
             .option("path", path)
@@ -839,10 +845,7 @@ def q_stream_avro_alert_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_avro_source,
         write_avro_dir,
     )
-    from fink_science_spark.streaming.shell import (
-        run_to_memory,
-        scoped_shuffle_partitions,
-    )
+    from fink_science_spark.streaming.shell import run_to_memory
 
     register_avro_source(spark)
     tag = _os.path.basename(sf_dir.rstrip("/"))
@@ -879,29 +882,28 @@ def q_stream_avro_alert_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _build_input_once(path, _build)
 
-    with scoped_shuffle_partitions(spark, 8):
-        stream = (
-            spark.readStream.format("avro_replay")
-            .option("path", path)
-            .option("max_partitions", "8")
-            .load()
-        )
-        df = concat_col(stream, "value")
-        enriched = df.select(
-            "user_id",
-            F.size("prv_candidates").alias("n_prv"),
-            F.round(delta_last("cvalue"), 6).alias("delta_last"),
-            F.size(F.filter("cvalue", lambda x: x >= 10.0)).alias("n_valid"),
-            F.coalesce(
-                F.col("candidate.value") > F.array_max("prv_candidates.value"),
-                F.lit(False),
-            ).alias("is_brightening"),
-        )
-        result = run_to_memory(
-            enriched, f"avro_alerts_{_uuid.uuid4().hex[:8]}", spark,
-            output_mode="append",
-        )
-    return result
+    # per-row enrichment holds no state: the session's width stands
+    stream = (
+        spark.readStream.format("avro_replay")
+        .option("path", path)
+        .option("max_partitions", "8")
+        .load()
+    )
+    df = concat_col(stream, "value")
+    enriched = df.select(
+        "user_id",
+        F.size("prv_candidates").alias("n_prv"),
+        F.round(delta_last("cvalue"), 6).alias("delta_last"),
+        F.size(F.filter("cvalue", lambda x: x >= 10.0)).alias("n_valid"),
+        F.coalesce(
+            F.col("candidate.value") > F.array_max("prv_candidates.value"),
+            F.lit(False),
+        ).alias("is_brightening"),
+    )
+    return run_to_memory(
+        enriched, f"avro_alerts_{_uuid.uuid4().hex[:8]}", spark,
+        output_mode="append",
+    )
 
 
 # --------------------------------------------------------------------------

@@ -1361,7 +1361,6 @@ def q_stream_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil as _shutil
 
     from fink_science_spark.queries_ext2 import _SCRATCH
-    from fink_science_spark.streaming.shell import scoped_shuffle_partitions
 
     tag = _os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     src_path = _os.path.join(_SCRATCH, f"mv_src_{tag}")
@@ -1376,33 +1375,36 @@ def q_stream_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # 4 files -> 4 micro-batches under maxFilesPerTrigger=1
     ev.repartition(4).write.parquet(src_path)
-    schema = spark.read.parquet(src_path).schema
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        partial = batch_df.groupBy("user_id", "event_type").agg(
+    def partial(df: DataFrame) -> DataFrame:
+        return df.groupBy("user_id", "event_type").agg(
             F.count("*").alias("n"),
             F.sum("qv").alias("s1"),
             F.min("qv").alias("mn"),
             F.max("qv").alias("mx"),
         )
-        partial.write.mode("append").parquet(state_path)
 
-    with scoped_shuffle_partitions(spark, 8):
-        stream = (
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .option("maxFilesPerTrigger", 1)
-            .load(src_path)
-        )
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        partial(batch_df).write.mode("append").parquet(state_path)
 
-    # compaction: merge the delta log into the finalized view
-    state = spark.read.parquet(state_path)
+    # the stream holds no state (each batch aggregates on its own inside
+    # foreachBatch), so it keeps the session's shuffle width
+    stream = (
+        spark.readStream.schema(ev.schema)
+        .format("parquet")
+        .option("maxFilesPerTrigger", 1)
+        .load(src_path)
+    )
+    q = (
+        stream.writeStream.foreachBatch(process)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+    # compaction: merge the delta log into the finalized view (its schema
+    # is known, so reading it back needs no inference job)
+    state = spark.read.schema(partial(ev).schema).parquet(state_path)
     return (
         state.groupBy("user_id", "event_type")
         .agg(

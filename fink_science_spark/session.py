@@ -15,6 +15,7 @@ handling, local master) but expressed as engine policy:
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import SparkSession
 
@@ -96,6 +97,22 @@ def _scratch_root() -> str | None:
     return None
 
 
+# The JVM's java.io.tmpdir on Linux when nothing overrides it.
+_JVM_DEFAULT_TMPDIR = "/tmp"
+
+# sun_path holds 108 bytes including the terminating NUL.
+_UNIX_PATH_MAX = 107
+
+
+def _fits_unix_socket(socket_dir: str) -> bool:
+    """Whether PySpark's socket files in ``socket_dir`` fit an AF_UNIX
+    address. PySpark names them ``<dir>/.<uuid4>.sock`` (43 bytes past the
+    directory); a longer path fails the driver's start-up with ``OSError:
+    AF_UNIX path too long``."""
+    probe = os.path.join(socket_dir, f".{uuid.UUID(int=0)}.sock")
+    return len(os.fsencode(probe)) <= _UNIX_PATH_MAX
+
+
 def get_session(
     app_name: str = "fink_science_spark",
     master: str | None = None,
@@ -170,11 +187,6 @@ def get_session(
         # item 1a) — micro-batches fork fresh workers and are the most
         # spawn-latency-sensitive path in the suite.
         .config("spark.python.authenticate.socketTimeout", "60s")
-        # Unix-domain sockets for the JVM<->python-worker channels
-        # (Spark 4.1): lower per-batch latency than TCP loopback and no
-        # ephemeral-port/auth handshake on worker spawn. Measured -12%
-        # on the python-heavy subset (stream_dedup_lsh 6.0->4.7 s).
-        .config("spark.python.unix.domain.socket.enabled", "true")
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "268435456")
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", "268435456")
         # Python workers unpickle UDFs that reference this package's
@@ -189,6 +201,7 @@ def get_session(
     # moves the streaming temp-checkpoint root (offset/commit logs +
     # state-store deltas are written and fsynced EVERY micro-batch).
     driver_java_opts = f"-Xms{DEFAULT_DRIVER_MEMORY} -XX:+AlwaysPreTouch"
+    jvmtmp = _JVM_DEFAULT_TMPDIR
     scratch = _scratch_root()
     if scratch:
         jvmtmp = os.path.join(scratch, "jvmtmp")
@@ -196,6 +209,18 @@ def get_session(
         builder = builder.config("spark.local.dir", scratch)
         driver_java_opts += f" -Djava.io.tmpdir={jvmtmp}"
     builder = builder.config("spark.driver.extraJavaOptions", driver_java_opts)
+    # Unix-domain sockets for the JVM<->python-worker channels
+    # (Spark 4.1): lower per-batch latency than TCP loopback and no
+    # ephemeral-port/auth handshake on worker spawn. Measured -12%
+    # on the python-heavy subset (stream_dedup_lsh 6.0->4.7 s). Left
+    # off (TCP loopback) when the socket path would not fit.
+    socket_dir = (extra_conf or {}).get(
+        "spark.python.unix.domain.socket.dir", jvmtmp
+    )
+    if _fits_unix_socket(socket_dir):
+        builder = builder.config(
+            "spark.python.unix.domain.socket.enabled", "true"
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
