@@ -21,7 +21,7 @@ from fink_science_spark import registry
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001: the pricing-summary
     aggregation (scan → filter → group-agg, fully codegen'd)."""
-    from fink_science_spark.queries import q_pricing_summary
+    from fink_science_spark.queries_relational import q_pricing_summary
 
     return q_pricing_summary(spark, "/root/testdata/sf0.001")
 

@@ -139,7 +139,7 @@ def lang_id(tok: Column | str) -> Column:
     # alphabetically smaller code wins ties — and a 0-score language can
     # never displace 'und'. (The first cut iterated reversed() here,
     # which silently handed ties to the alphabetically LAST code; the
-    # SQL twin in queries_ext._lang_argmax_sql had the same inversion —
+    # SQL twin in queries_text._lang_argmax_sql had the same inversion —
     # both fixed together, so parity holds through the change.)
     for lang, score in ordered:
         take = score > best_score

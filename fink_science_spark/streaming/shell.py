@@ -4,15 +4,12 @@ The reference's modules are all stateless per-micro-batch column appends —
 the broker applies them inside a streaming query (SURVEY.md §2.9). This
 module provides that shell natively:
 
-- :func:`enrich_stream` — readStream → the same enrichment DAG used in
-  batch (one code path for both, the property the reference gets from
-  per-row statelessness) → sink via foreachBatch or direct writeStream.
 - :func:`windowed_counts` — watermarked tumbling-window aggregation
   (the late-data-safe form of "events per window").
-- :func:`windowed_history` — the one cross-batch stateful op the ecosystem
-  implies: per-key collect_list of recent measurements with a watermark
-  (the streaming materialization of the aggregated light-curve table,
-  SURVEY.md §1.5).
+- :func:`interval_join_streams` — the watermarked stream-stream join.
+- :func:`run_to_memory` / :func:`run_foreach_batch` — run a stream to
+  completion with an ``availableNow`` trigger, at a state width chosen by
+  :func:`state_partitions` when the stream holds state.
 
 All transformations are identical DataFrame expressions in batch and
 streaming; tests run them with ``availableNow`` triggers against the same
@@ -65,50 +62,25 @@ def state_partitions(
 
 
 @contextlib.contextmanager
-def scoped_shuffle_partitions(spark: SparkSession, n: int):
-    """Temporarily pin spark.sql.shuffle.partitions (restored on exit).
+def scoped_shuffle_partitions(spark: SparkSession, n: int | None):
+    """Temporarily pin spark.sql.shuffle.partitions (restored on exit);
+    ``None`` leaves the session's width as it is.
 
     Stateful streaming creates one state store per shuffle partition; a
     batch-oriented session default (32+) means 32 store instances for a
     handful of keys — pure overhead at test scale and the wrong unit of
-    parallelism for small keyed state. Streaming queries that run
-    blocking (availableNow → memory sink) scope the setting to their own
-    plan-and-run window.
-
-    Stateful streams take ``n`` from :func:`state_partitions` (sized to
-    their source). Two keep an explicit width because their state
-    operator runs per-group pandas work that needs the cores, not the
-    stores: ``stream_stateful_user_stats`` (8) and ``stream_dedup_lsh``
-    (4). Streams that hold no state do not scope the width at all."""
+    parallelism for small keyed state. The runners below scope the
+    setting to their own start-and-wait window: a stream's session is
+    cloned at ``start()``, so the width it runs at is read there."""
+    if n is None:
+        yield
+        return
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
-def read_file_stream(
-    spark: SparkSession,
-    path: str,
-    schema,
-    fmt: str = "parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    reader = spark.readStream.format(fmt).schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.load(path)
-
-
-def enrich_stream(
-    stream_df: DataFrame,
-    transform: Callable[[DataFrame], DataFrame],
-) -> DataFrame:
-    """Apply a batch-identical enrichment DAG to a streaming frame.
-    Stateless transforms (select/withColumn/filter/broadcast join) pass
-    through unchanged — this is the engine's core streaming contract."""
-    return transform(stream_df)
 
 
 def windowed_counts(
@@ -133,51 +105,54 @@ def windowed_counts(
     )
 
 
-def windowed_history(
-    stream_df: DataFrame,
-    ts_col: str,
-    key: str,
-    value_cols: list[str],
-    window: str = "30 days",
-    watermark: str = "1 day",
-) -> DataFrame:
-    """Per-key windowed light-curve materialization: time-sorted struct
-    arrays per (key, window) — the streaming equivalent of the aggregated
-    SSO table (groupBy + collect_list + sort under a watermark)."""
-    struct_col = F.struct(F.col(ts_col).alias("t"), *[F.col(c) for c in value_cols])
-    return (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("w"), F.col(key))
-        .agg(F.array_sort(F.collect_list(struct_col)).alias("history"))
-        .select(F.col("w.start").alias("window_start"), key, "history")
-    )
-
-
 def run_to_memory(
     stream_result: DataFrame,
     query_name: str,
     spark: SparkSession,
     output_mode: str = "complete",
+    width: int | None = None,
 ) -> DataFrame:
     """Execute a streaming frame with an availableNow trigger into a memory
     sink and return the completed static result — used by tests and the
     correctness harness to check stream/batch parity. Stream-stream joins
-    only support append mode; aggregations here use complete.
+    only support append mode; aggregations here use complete. ``width``
+    is the shuffle width (state-store count) the stream runs at; None
+    keeps the session's.
 
     The sink's temp view is dropped before returning: the returned frame
     still reads the sink, but the session catalog no longer holds it, so
     the rows live only as long as the caller keeps the frame."""
-    q = (
+    writer = (
         stream_result.writeStream.format("memory")
         .queryName(query_name)
         .outputMode(output_mode)
         .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
+    with scoped_shuffle_partitions(spark, width):
+        writer.start().awaitTermination()
     result = spark.table(query_name)
     spark.catalog.dropTempView(query_name)
     return result
+
+
+def run_foreach_batch(
+    stream: DataFrame,
+    process: Callable[[DataFrame, int], None],
+    spark: SparkSession,
+    width: int | None = None,
+    output_mode: str = "append",
+) -> None:
+    """Run ``process(batch_df, batch_id)`` on every micro-batch of
+    ``stream`` with an availableNow trigger and wait for the end; the
+    sink is whatever ``process`` writes. ``width`` as in
+    :func:`run_to_memory`."""
+    writer = (
+        stream.writeStream.foreachBatch(process)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+    )
+    with scoped_shuffle_partitions(spark, width):
+        writer.start().awaitTermination()
 
 
 def interval_join_streams(

@@ -1,6 +1,6 @@
 """Arbitrary stateful streaming via Spark 4's transformWithState API.
 
-``applyInPandasWithState`` (queries_ext2.q_stream_stateful_user_stats)
+``applyInPandasWithState`` (queries_streaming.q_stream_stateful_user_stats)
 carries one opaque state tuple per key. The successor API —
 ``transformWithStateInPandas`` — gives keyed state PRIMITIVES (ValueState
 / ListState / MapState, optional TTL, event/processing-time timers)

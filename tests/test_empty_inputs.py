@@ -9,14 +9,29 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def _queries_of(*modules):
-    """The registered queries defined in the given query modules."""
+# the queries added in waves 14 and 16-17, by name
+WAVE14 = [
+    "bm25_topk", "fuzzy_match_names", "stratified_sample", "acf_lags",
+    "seasonal_decompose", "length_bucket_batches", "snapshot_diff",
+    "rrf_fusion", "ab_welch_ttest", "fk_integrity_audit", "calibration_bins",
+    "gap_islands",
+]
+WAVE16_17 = [
+    "min_cost_supplier", "market_share", "product_profit", "important_parts",
+    "custorder_distribution", "top_supplier", "supplier_part_counts",
+    "small_qty_revenue", "large_volume_customers", "disjunctive_revenue",
+    "sole_late_supplier", "dormant_customers", "partition_skew_report",
+    "zipf_skew_fit", "compaction_plan", "balanced_ranges", "video_scene_cuts",
+    "audio_silence_map",
+]
+
+
+def _queries_of(names):
+    """The registered builders of ``names``."""
     import __spark_entry__ as entrymod
 
-    names = {f"fink_science_spark.{m}" for m in modules}
-    return {
-        n: q for n, q in entrymod.queries().items() if q.__module__ in names
-    }
+    queries = entrymod.queries()
+    return {n: queries[n] for n in names}
 
 
 @pytest.fixture()
@@ -240,8 +255,8 @@ def test_ppjoin_empty(spark, empty_docs):
 
 def test_dup_span_profile_short_docs(spark):
     """Docs shorter than the 5-gram window produce n_grams=0, frac 0.0."""
-    import fink_science_spark.queries_ext10 as x
-    from fink_science_spark.queries_ext import _doc_tokens
+    import fink_science_spark.queries_dedup as x
+    from fink_science_spark.queries_text import _doc_tokens
 
     # monkeypatch-free: drive the query on a temp dir with tiny docs
     import os
@@ -273,7 +288,7 @@ def test_semantic_dedup_drops_planted_clone(spark):
     import numpy as np
 
     from fink_science_spark.operators.similarity import train_ivf_centroids
-    from fink_science_spark.queries_ext10 import _SEM_TAU
+    from fink_science_spark.queries_dedup import _SEM_TAU
 
     assert _SEM_TAU < 1.0
     rng = np.random.RandomState(3)
@@ -282,7 +297,7 @@ def test_semantic_dedup_drops_planted_clone(spark):
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
 
     # miniature inline SemDeDup on a 2-cell codebook
-    import fink_science_spark.queries_ext10 as x
+    import fink_science_spark.queries_dedup as x
     from unittest import mock
 
     trained = train_ivf_centroids(
@@ -290,10 +305,10 @@ def test_semantic_dedup_drops_planted_clone(spark):
         "cid", "cv", n_centroids=2, rounds=1,
     )
     with mock.patch(
-        "fink_science_spark.queries_ext3._ivf_codebook",
+        "fink_science_spark.queries_dedup._ivf_codebook",
         lambda _s, _d: trained,
     ), mock.patch(
-        "fink_science_spark.queries._t", lambda _s, _d, _n: df
+        "fink_science_spark.queries_dedup._t", lambda _s, _d, _n: df
     ):
         out = {r["vec_id"]: r for r in x.q_semantic_dedup(spark, "unused").collect()}
     # id 0 has no earlier neighbor, so it is always kept; its clone
@@ -313,7 +328,7 @@ def test_image_resize_pool_empty(spark):
 
 
 def test_skyline_kernel_empty(spark):
-    from fink_science_spark.queries_ext12 import _skyline_kernel
+    from fink_science_spark.queries_analytics import _skyline_kernel
 
     empty = spark.createDataFrame([], "p_partkey long, price double, size long")
     out = empty.mapInPandas(
@@ -325,7 +340,7 @@ def test_skyline_kernel_empty(spark):
 def test_median_bracket_empty(spark, tmp_path):
     """ADVICE r3: an empty lineitem table must yield (n=0, median=NULL),
     not a driver TypeError on float(None) from the stats collect."""
-    from fink_science_spark.queries_ext12 import q_median_bracket
+    from fink_science_spark.queries_analytics import q_median_bracket
 
     d = str(tmp_path / "mb_empty")
     spark.createDataFrame(
@@ -355,7 +370,7 @@ def test_wave14_queries_empty(spark, tmp_path):
         spark.createDataFrame([], s).write.mode("overwrite").parquet(
             f"{d}/{t}.parquet"
         )
-    for name, q in _queries_of("queries_ext13").items():
+    for name, q in _queries_of(WAVE14).items():
         out = q(spark, d)
         if name == "fk_integrity_audit":
             # the audit reports one row per FK edge even on empty tables
@@ -372,7 +387,12 @@ def test_wave14_queries_degenerate_constant_inputs(spark, tmp_path):
     crash class the round-3 fuzz pass established."""
     import datetime
 
-    import fink_science_spark.queries_ext13 as x
+    from fink_science_spark.queries_analytics import (
+        q_ab_welch_ttest,
+        q_acf_lags,
+        q_calibration_bins,
+    )
+    from fink_science_spark.queries_similarity import q_bm25_topk, q_rrf_fusion
 
     d = str(tmp_path / "w14_degenerate")
     base = datetime.datetime(2024, 1, 1)
@@ -393,17 +413,17 @@ def test_wave14_queries_degenerate_constant_inputs(spark, tmp_path):
     ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
 
     # calibration: all scores 0.5, bin 5, zero positives (5.0 > 5.0 false)
-    rows = x.q_calibration_bins(spark, d).collect()
+    rows = q_calibration_bins(spark, d).collect()
     assert len(rows) == 1 and rows[0]["bin"] == 5
     assert rows[0]["mean_score"] == 0.5 and rows[0]["n_pos"] == 0
     # welch: the 1-row cohort is dropped -> no (a, b) pair -> empty
-    assert x.q_ab_welch_ttest(spark, d).count() == 0
+    assert q_ab_welch_ttest(spark, d).count() == 0
     # acf: constant daily series -> den = 0 -> NULL acf, no crash
-    for r in x.q_acf_lags(spark, d).collect():
+    for r in q_acf_lags(spark, d).collect():
         assert r["acf"] is None
     # bm25 / rrf: all-empty corpus text -> no matches, no crash
-    assert x.q_bm25_topk(spark, d).count() == 0
-    assert x.q_rrf_fusion(spark, d).count() == 0
+    assert q_bm25_topk(spark, d).count() == 0
+    assert q_rrf_fusion(spark, d).count() == 0
 
 
 def test_welch_zero_variance_cohorts_yield_null_stats(spark, tmp_path):
@@ -411,7 +431,7 @@ def test_welch_zero_variance_cohorts_yield_null_stats(spark, tmp_path):
     t and dof NULL (0/0 guarded), no ANSI crash."""
     import datetime
 
-    from fink_science_spark.queries_ext13 import q_ab_welch_ttest
+    from fink_science_spark.queries_analytics import q_ab_welch_ttest
 
     d = str(tmp_path / "welch_const")
     base = datetime.datetime(2024, 1, 1)
@@ -462,9 +482,7 @@ def test_wave16_wave17_queries_empty(spark, tmp_path):
         )
     one_null_row = {"small_qty_revenue", "disjunctive_revenue",
                     "zipf_skew_fit"}
-    for name, q in _queries_of(
-        "queries_ext14", "queries_ext15", "queries_ext16"
-    ).items():
+    for name, q in _queries_of(WAVE16_17).items():
         out = q(spark, d)
         if name in one_null_row:
             rows = out.collect()
@@ -484,8 +502,8 @@ def test_wave16_wave17_degenerate_constant_inputs(spark, tmp_path):
     DIVIDE_BY_ZERO."""
     import datetime
 
-    from fink_science_spark.queries_ext14 import q_market_share
-    from fink_science_spark.queries_ext15 import q_zipf_skew_fit
+    from fink_science_spark.queries_relational import q_market_share
+    from fink_science_spark.queries_analytics import q_zipf_skew_fit
 
     od = datetime.datetime(1996, 1, 1)
 

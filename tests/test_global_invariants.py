@@ -88,8 +88,13 @@ def test_no_exotic_types_in_any_oracle_result():
 def test_query_registry():
     """Each query is registered once: a second registration of a name
     raises and leaves the registry as it was, every oracle belongs to a
-    registered builder, and the rows/s table names only bench queries."""
+    registered builder, and the rows/s table names only bench queries.
+    Queries live in the nine family modules and nowhere else, and every
+    stream query is in ``queries_streaming``."""
+    import pkgutil
+
     import bench
+    import fink_science_spark as pkg
     from fink_science_spark import registry
 
     builders = registry.queries()
@@ -101,6 +106,21 @@ def test_query_registry():
     assert not orphans, f"oracles without a builder: {orphans}"
     unscanned = set(bench.SCAN_BOUND) - set(registry.bench_names())
     assert not unscanned, f"SCAN_BOUND names outside the bench: {unscanned}"
+    families = {
+        f"queries_{f}" for f in (
+            "relational", "alerts", "models", "dedup", "similarity", "text",
+            "analytics", "streaming", "multimodal",
+        )
+    }
+    modules = {m.name for m in pkgutil.iter_modules(pkg.__path__)
+               if m.name.startswith("queries")}
+    assert modules == families, f"query modules: {sorted(modules ^ families)}"
+    misplaced = {
+        n: b.__module__ for n, b in builders.items()
+        if n.startswith("stream_")
+        and b.__module__ != "fink_science_spark.queries_streaming"
+    }
+    assert not misplaced, f"stream queries outside queries_streaming: {misplaced}"
 
 
 def test_no_unbounded_topandas_in_query_modules():

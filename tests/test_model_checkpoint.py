@@ -91,32 +91,77 @@ def test_perturbed_checkpoint_changes_scores(spark, tmp_path):
 def test_stacked_forest_descent_bit_identical_to_per_tree():
     """The across-trees vectorized descent (round-9 optimization) must
     route every row to the same leaf and fold the same values in the
-    same order as the per-tree reference loop."""
+    same order as the per-tree reference loop. Batch sizes straddle the
+    dispatch crossover: ``_STACKED_MAX_ROWS`` rows take the stacked
+    descent, one more row takes the per-tree loop, and both must equal
+    the reference for the onnx, rf and gbt kernels."""
     import numpy as np
 
     from fink_science_spark.operators.sklearn_forest import (
+        _STACKED_MAX_ROWS,
         _tree_leaf_rows,
+        gbt_proba,
         load_checkpoint,
         onnx_ensemble_raw,
         rf_proba,
     )
 
     rng = np.random.RandomState(7)
+    sizes = (_STACKED_MAX_ROWS, _STACKED_MAX_ROWS + 1)
 
     ck = load_checkpoint("anomaly_forest_g")
-    X = rng.rand(257, 25) * 4 - 2
-    ref = np.full(len(X), float(ck["base"]))
-    for t in ck["trees"]:
-        ref = ref + t["value"][_tree_leaf_rows(X, t), 0]
-    assert np.array_equal(onnx_ensemble_raw(X, ck), ref)
+    for n in (257, *sizes):
+        X = rng.rand(n, 25) * 4 - 2
+        ref = np.full(len(X), float(ck["base"]))
+        for t in ck["trees"]:
+            ref = ref + t["value"][_tree_leaf_rows(X, t), 0]
+        assert np.array_equal(onnx_ensemble_raw(X, ck), ref), n
 
     ck = load_checkpoint("mulens_rf")
-    X = rng.rand(131, 47) * 2
-    ref = np.zeros((len(X), ck["trees"][0]["value"].shape[1]))
-    for t in ck["trees"]:
-        ref = ref + t["value"][_tree_leaf_rows(X, t)]
-    ref = ref / float(len(ck["trees"]))
-    assert np.array_equal(rf_proba(X, ck), ref)
+    for n in (131, *sizes):
+        X = rng.rand(n, 47) * 2
+        ref = np.zeros((len(X), ck["trees"][0]["value"].shape[1]))
+        for t in ck["trees"]:
+            ref = ref + t["value"][_tree_leaf_rows(X, t)]
+        ref = ref / float(len(ck["trees"]))
+        assert np.array_equal(rf_proba(X, ck), ref), n
+
+    ck = load_checkpoint("orphans_gbt")
+    lr = float(ck["learning_rate"])
+    for n in (97, *sizes):
+        X = rng.rand(n, 12) * 4 - 2
+        raw = np.full(len(X), float(ck["init_raw"]))
+        for t in ck["trees"]:
+            raw = raw + lr * t["value"][_tree_leaf_rows(X, t), 0]
+        ref = 1.0 / (1.0 + np.exp(-raw))
+        assert np.array_equal(gbt_proba(X, ck), ref), n
 
     # empty batch stays well-shaped
+    ck = load_checkpoint("mulens_rf")
     assert rf_proba(np.zeros((0, 47)), ck).shape == (0, 4)
+
+
+def test_anomaly_forest_without_a_split_on_a_feature_fails_loudly(monkeypatch):
+    """A swapped anomaly checkpoint that never splits on some feature
+    leaves that feature's value range unknown: building the query's
+    features must raise naming the checkpoint and the feature, not emit
+    an infinite literal that fails later as an unrelated SQL error."""
+    import numpy as np
+
+    from fink_science_spark.operators import sklearn_forest
+    from fink_science_spark.queries_models import _anom_feat_cols, _anom_feat_sql
+
+    real = sklearn_forest.load_checkpoint
+
+    def no_split_on_feature_1(name):
+        ck = dict(real(name))
+        ck["trees"] = [
+            dict(t, feature=np.where(t["feature"] == 1, 0, t["feature"]))
+            for t in ck["trees"]
+        ]
+        return ck
+
+    monkeypatch.setattr(sklearn_forest, "load_checkpoint", no_split_on_feature_1)
+    for build in (_anom_feat_cols, _anom_feat_sql):
+        with pytest.raises(ValueError, match=r"'anomaly_forest_g'.*feature index 1\b"):
+            build("g", "gsum", "gmax")

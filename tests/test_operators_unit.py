@@ -458,7 +458,7 @@ def test_incremental_minhash_matches_batch_restriction(spark):
         minhash_band_index,
         minhash_lsh_pairs,
     )
-    from fink_science_spark.queries_ext import _MH_BANDS, _MH_NUM, _doc_shingles
+    from fink_science_spark.queries_dedup import _MH_BANDS, _MH_NUM, _doc_shingles
 
     docs = _doc_shingles(spark, "/root/testdata/sf0.001")
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
@@ -1070,7 +1070,7 @@ def test_triangle_hub_cap_drops_skew(spark):
     """A star hub above the degree cap must be excluded from triangle
     enumeration (the O(d²) skew guard), while triangles among normal
     vertices survive."""
-    from fink_science_spark.queries_ext10 import triangle_stats
+    from fink_science_spark.queries_analytics import triangle_stats
 
     hub = 1000
     edges = [(1, 2), (2, 3), (1, 3)]  # one clean triangle
@@ -1092,7 +1092,7 @@ def test_skyline_kernel_matches_bruteforce():
     import numpy as np
     import pandas as pd
 
-    from fink_science_spark.queries_ext12 import _skyline_kernel
+    from fink_science_spark.queries_analytics import _skyline_kernel
 
     rng = np.random.RandomState(7)
     for trial in range(20):
@@ -1123,7 +1123,7 @@ def test_skyline_two_stage_equals_single_stage():
     import numpy as np
     import pandas as pd
 
-    from fink_science_spark.queries_ext12 import _skyline_kernel
+    from fink_science_spark.queries_analytics import _skyline_kernel
 
     rng = np.random.RandomState(11)
     parts = [
@@ -1152,7 +1152,7 @@ def test_median_bracket_odd_even_constant(spark, tmp_path):
     bracket short-circuit)."""
     import statistics
 
-    from fink_science_spark.queries_ext12 import q_median_bracket
+    from fink_science_spark.queries_analytics import q_median_bracket
 
     cases = [
         [3.0, 1.0, 2.0],                     # odd
@@ -1178,7 +1178,7 @@ def test_median_bracket_boundary_heavy_values(spark, tmp_path):
     onto and around bin boundaries."""
     import statistics
 
-    from fink_science_spark.queries_ext12 import q_median_bracket, _MB_BINS
+    from fink_science_spark.queries_analytics import _MB_BINS, q_median_bracket
 
     lo, hi = 3.1, 97.7
     width = (hi - lo) / _MB_BINS

@@ -455,7 +455,7 @@ def test_minhash_hashed_band_keys_narrow_the_shuffle(spark):
     unchanged (a 64-bit collision can only add a candidate, which the
     exact-Jaccard verify rejects)."""
     from fink_science_spark.operators.dedup import minhash_lsh_pairs
-    from fink_science_spark.queries_ext import _doc_shingles
+    from fink_science_spark.queries_dedup import _doc_shingles
 
     docs = _doc_shingles(spark, SF)
 

@@ -657,7 +657,7 @@ def test_weighted_sample_matches_python_aes(spark, rows, k):
     import math
 
     from fink_science_spark.functions.hashing import hash64
-    from fink_science_spark.queries_ext6 import _U_DENOM
+    from fink_science_spark.queries_text import _U_DENOM
     from pyspark.sql.window import Window
 
     df = spark.createDataFrame(rows, "doc_id long, w double")
@@ -769,7 +769,7 @@ def test_segment_overlap_matches_bruteforce(spark, tmp_path):
     import itertools
     import random
 
-    from fink_science_spark.queries_ext12 import q_segment_overlap
+    from fink_science_spark.queries_analytics import q_segment_overlap
 
     rng = random.Random(13)
     types = ["a", "b", "c", "d"]
@@ -806,7 +806,7 @@ def test_mmr_matches_bruteforce_greedy(spark, tmp_path):
     (quantize-then-argmax semantics: 9-dec cosines, cid ties)."""
     import numpy as np
 
-    from fink_science_spark.queries_ext12 import (
+    from fink_science_spark.queries_similarity import (
         _MMR_K,
         _MMR_LAM,
         _MMR_N,
@@ -865,7 +865,7 @@ def test_segment_overlap_lane_sharding_beyond_63_types(spark, tmp_path):
     import itertools
     import random
 
-    from fink_science_spark.queries_ext12 import q_segment_overlap
+    from fink_science_spark.queries_analytics import q_segment_overlap
 
     rng = random.Random(7)
     types = [f"t{i:03d}" for i in range(70)]  # 2 lanes (ceil(70/63))
@@ -911,10 +911,10 @@ def test_skyline_anticorrelated_bounded_tasks(spark, tmp_path):
     The grid refine must (a) still return the exact frontier and (b)
     spread the refine input across dominance-grid cells so no task holds
     more than ~n/B points."""
-    from fink_science_spark.queries_ext12 import (
-        q_skyline_frontier,
+    from fink_science_spark.queries_analytics import (
         _SKY_MAX_BINS,
         _SKY_TARGET_CELL,
+        q_skyline_frontier,
     )
 
     # anti-correlated for (min price, max size): size GROWS with price,

@@ -17,7 +17,7 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def events(spark):
-    from fink_science_spark.queries import _events_us
+    from fink_science_spark.tables import _events_us
 
     rows = (
         _events_us(spark, SF)
@@ -61,7 +61,7 @@ def test_cusum_matches_recursive_definition(spark, events):
     """The engine computes S via the prefix-sum − running-min identity;
     this recomputes S by the textbook recursion S_i = max(0, S_{i-1}+d_i)."""
     import __spark_entry__ as e
-    from fink_science_spark.queries_ext10 import (
+    from fink_science_spark.queries_analytics import (
         _CUSUM_H,
         _CUSUM_K_DEN,
         _CUSUM_K_NUM,
@@ -89,7 +89,7 @@ def test_cusum_matches_recursive_definition(spark, events):
 
 def test_sessions_native_matches_gap_walk(spark, events):
     import __spark_entry__ as e
-    from fink_science_spark.queries_ext9 import _SESS_GAP_US
+    from fink_science_spark.queries_analytics import _SESS_GAP_US
 
     got = {
         (r.user_id, r.session_id): (r.n, r.start_us, r.end_us)

@@ -282,14 +282,14 @@ def test_pq_lloyd_round_reduces_reconstruction_error(spark):
     seed codebook (k-means monotonicity, modulo the 6-dec mean rounding)."""
     import pyspark.sql.functions as F
 
-    from fink_science_spark.queries_ext10 import (
+    from fink_science_spark.queries_similarity import (
         _PQ_K,
         _PQ_S,
         _PQ_SUBDIM,
         q_pq_compression,
     )
     from fink_science_spark.functions.hashing import hash64
-    from fink_science_spark.queries import _t
+    from fink_science_spark.tables import _t
 
     # trained error from the registered query
     trained = (
@@ -347,7 +347,7 @@ def test_pq_codes_cover_multiple_cells(spark, registry):
     """Degenerate training (all vectors in one cell) would compress
     nothing; assert the codebook is actually used across cells."""
     rows = registry["pq_compression"](spark, SF).collect()
-    from fink_science_spark.queries_ext10 import _PQ_K
+    from fink_science_spark.queries_similarity import _PQ_K
 
     for c in ("c0", "c1", "c2", "c3"):
         used = {r[c] for r in rows}
@@ -372,7 +372,7 @@ def test_pq_adc_distances_track_exact_distances(spark, registry):
     term — the textbook underestimate.)"""
     import pyspark.sql.functions as F
 
-    from fink_science_spark.queries import _t
+    from fink_science_spark.tables import _t
 
     adc = registry["pq_adc_topk"](spark, SF).collect()
     got = {(r["qid"], r["cid"]) for r in adc}
@@ -404,7 +404,7 @@ def test_pq_adc_distances_track_exact_distances(spark, registry):
         exact["t"].mean(),
     )
     # (a) approx distances positively correlate with exact distances
-    from fink_science_spark.queries_ext10 import _pq_d2_quant, _pq_trained
+    from fink_science_spark.queries_similarity import _pq_d2_quant, _pq_trained
 
     subs, assign, cb1 = _pq_trained(spark, SF)
     codes = assign(cb1).select("vec_id", "s", "cell")
@@ -476,7 +476,7 @@ def test_psi_nonnegative_and_buckets_bounded(spark, registry):
     within the fixed bin range."""
     rows = registry["feature_drift_psi"](spark, SF).collect()
     assert rows
-    from fink_science_spark.queries_ext10 import _PSI_BINS
+    from fink_science_spark.queries_analytics import _PSI_BINS
 
     assert all(0 <= r["bucket"] < _PSI_BINS for r in rows)
     assert all(r["contrib"] >= 0 for r in rows)
@@ -510,7 +510,7 @@ def test_psi_zero_for_identical_slices(spark):
             }
         )
     )
-    from fink_science_spark.queries_ext10 import _PSI_BINS, _PSI_Q
+    from fink_science_spark.queries_analytics import _PSI_BINS, _PSI_Q
 
     v = F.col("value")
     bounds = df.agg(F.min(v).alias("__lo"), F.max(v).alias("__hi"))
@@ -538,7 +538,7 @@ def test_weighted_sample_biases_toward_weight(spark, registry):
     yields exactly k rows with ranks 1..k."""
     import pyspark.sql.functions as F
 
-    from fink_science_spark.queries_ext10 import _WS_K
+    from fink_science_spark.queries_analytics import _WS_K
 
     rows = registry["weighted_sample"](spark, SF).collect()
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -565,8 +565,7 @@ def test_user_trend_matches_numpy_polyfit(spark, registry):
     import numpy as np
     import pyspark.sql.functions as F
 
-    from fink_science_spark.queries import _events_us
-    from fink_science_spark.queries_ext10 import _RS_DAY_US
+    from fink_science_spark.tables import DAY_US, _events_us
 
     rows = {r["user_id"]: r for r in registry["user_trend"](spark, SF).collect()}
     assert rows
@@ -575,7 +574,7 @@ def test_user_trend_matches_numpy_polyfit(spark, registry):
         .filter(F.col("event_type") == "purchase")
         .select(
             "user_id",
-            (F.col("ts_us") - (F.col("ts_us") % F.lit(_RS_DAY_US)))
+            (F.col("ts_us") - (F.col("ts_us") % F.lit(DAY_US)))
             .cast("long")
             .alias("tus"),
             "value",
@@ -585,7 +584,7 @@ def test_user_trend_matches_numpy_polyfit(spark, registry):
     by_user = {}
     for p in pts:
         by_user.setdefault(p["user_id"], []).append(
-            (p["tus"] // _RS_DAY_US, p["value"])
+            (p["tus"] // DAY_US, p["value"])
         )
     checked = 0
     for uid, data in by_user.items():
@@ -649,7 +648,7 @@ def test_hll_portable_accuracy_and_merge(spark):
     sketches' registers (the 100 TB shard-merge property)."""
     import duckdb
 
-    from fink_science_spark.queries_ext10 import (
+    from fink_science_spark.queries_analytics import (
         _oracle_hll_distinct_portable,
         q_hll_distinct_portable,
     )
@@ -705,7 +704,7 @@ def test_shard_manifest_checksum_partitioning_independent(spark):
     """The xor content checksum must be identical under adversarial
     repartitionings — the property that makes the manifest comparable
     across clusters and runs."""
-    from fink_science_spark.queries_ext10 import q_shard_manifest
+    from fink_science_spark.queries_text import q_shard_manifest
 
     base = {
         r["shard"]: r["content_checksum"]
@@ -714,15 +713,13 @@ def test_shard_manifest_checksum_partitioning_independent(spark):
 
     from unittest import mock
 
-    import fink_science_spark.queries as Q
-
-    orig_t = Q._t
+    from fink_science_spark.tables import _t as orig_t
 
     def shuffled_t(s, d, name):
         df = orig_t(s, d, name)
         return df.repartition(13) if name == "documents" else df
 
-    with mock.patch("fink_science_spark.queries._t", shuffled_t):
+    with mock.patch("fink_science_spark.queries_text._t", shuffled_t):
         shuffled = {
             r["shard"]: r["content_checksum"]
             for r in q_shard_manifest(spark, "/root/testdata/sf0.001").collect()

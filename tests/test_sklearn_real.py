@@ -296,7 +296,7 @@ def test_lia_features_exercise_trained_splits(spark, sf_smoke):
         lia_features_per_group,
     )
     from fink_science_spark.operators.sklearn_forest import load_checkpoint
-    from fink_science_spark.queries import _events_us
+    from fink_science_spark.tables import _events_us
 
     ev = _events_us(spark, sf_smoke).filter(
         F.col("event_type").isin("click", "purchase")

@@ -65,43 +65,36 @@ def doc_sources(spark, tmp_path_factory):
 
 
 def test_same_enrichment_output_across_source_formats(spark, doc_sources):
-    from fink_science_spark.streaming.shell import (
-        enrich_stream,
-        read_file_stream,
-        run_to_memory,
-        scoped_shuffle_partitions,
-    )
+    from fink_science_spark.streaming.shell import run_to_memory
 
     base, pq_dir, csv_dir = doc_sources
     schema = base.schema
     expected = _canon_rows(_enrich(base))
     assert len(expected) > 0
 
-    with scoped_shuffle_partitions(spark, 4):
-        got_pq_stream = _canon_rows(
-            run_to_memory(
-                enrich_stream(
-                    read_file_stream(spark, pq_dir, schema, fmt="parquet"),
-                    _enrich,
-                ),
-                "fmt_eq_parquet",
-                spark,
-                output_mode="append",
-            )
+    got_pq_stream = _canon_rows(
+        run_to_memory(
+            _enrich(spark.readStream.format("parquet").schema(schema).load(pq_dir)),
+            "fmt_eq_parquet",
+            spark,
+            output_mode="append",
+            width=4,
         )
-        csv_reader = (
-            spark.readStream.format("csv")
-            .schema(schema)
-            .options(header=True, quote='"', escape='"', multiLine=True)
+    )
+    csv_reader = (
+        spark.readStream.format("csv")
+        .schema(schema)
+        .options(header=True, quote='"', escape='"', multiLine=True)
+    )
+    got_csv_stream = _canon_rows(
+        run_to_memory(
+            _enrich(csv_reader.load(csv_dir)),
+            "fmt_eq_csv",
+            spark,
+            output_mode="append",
+            width=4,
         )
-        got_csv_stream = _canon_rows(
-            run_to_memory(
-                enrich_stream(csv_reader.load(csv_dir), _enrich),
-                "fmt_eq_csv",
-                spark,
-                output_mode="append",
-            )
-        )
+    )
 
     assert got_pq_stream == expected
     assert got_csv_stream == expected

@@ -16,7 +16,7 @@ import uuid
 import pandas as pd
 import pytest
 
-from fink_science_spark.queries import _ts_event_col
+from fink_science_spark.tables import _ts_event_col
 
 from pyspark.sql import functions as F
 
@@ -215,7 +215,7 @@ def test_sequence_packing_across_batches(spark, multi_file_documents):
 
     from fink_science_spark.functions.hashing import hash64
     from fink_science_spark.functions.text import tokens
-    from fink_science_spark.queries_ext6 import _PACK_BUDGET, _PACK_SHARDS
+    from fink_science_spark.queries_text import _PACK_BUDGET, _PACK_SHARDS
 
     schema = spark.read.parquet(multi_file_documents).schema
 
@@ -553,8 +553,8 @@ def test_stream_dedup_lsh_across_batches(spark):
     EXACTLY the batch dedup_minhash_lsh pair set (pairs that span batches
     only exist if the bucket state survives the trigger boundary)."""
     from fink_science_spark.operators.dedup import minhash_lsh_pairs
-    from fink_science_spark.queries_ext import _MH_BANDS, _MH_NUM, _doc_shingles
-    from fink_science_spark.queries_ext10 import q_stream_dedup_lsh
+    from fink_science_spark.queries_dedup import _MH_BANDS, _MH_NUM, _doc_shingles
+    from fink_science_spark.queries_streaming import q_stream_dedup_lsh
 
     src = os.path.join(SCRATCH, "stream_lsh_multibatch_src")
     shutil.rmtree(src, ignore_errors=True)
@@ -595,8 +595,8 @@ def test_stream_dedup_lsh_dup_density_stress_no_driver_funnel(spark):
     the verify join from a FILE scan, never a driver-materialized local
     relation (the old memory-sink + collect() funnel)."""
     from fink_science_spark.operators.dedup import minhash_lsh_pairs
-    from fink_science_spark.queries_ext import _MH_BANDS, _MH_NUM, _doc_shingles
-    from fink_science_spark.queries_ext10 import q_stream_dedup_lsh
+    from fink_science_spark.queries_dedup import _MH_BANDS, _MH_NUM, _doc_shingles
+    from fink_science_spark.queries_streaming import q_stream_dedup_lsh
 
     base = spark.read.parquet(os.path.join(SF, "documents.parquet"))
     reps = None

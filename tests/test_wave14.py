@@ -34,7 +34,7 @@ def test_bm25_no_explode_no_corpus_shuffle(spark):
     """The tf path is a per-row HOF against the fixed term list: the
     plan must contain NO Generate (explode) node, and the only join is
     the 1-row stats broadcast."""
-    from fink_science_spark.queries_ext13 import q_bm25_topk
+    from fink_science_spark.queries_similarity import q_bm25_topk
 
     plan = plan_of(q_bm25_topk(spark, SF))
     assert "Generate" not in plan, plan
@@ -43,7 +43,7 @@ def test_bm25_no_explode_no_corpus_shuffle(spark):
 
 
 def test_bm25_scores_positive_and_ranked(spark):
-    from fink_science_spark.queries_ext13 import _BM25_K, q_bm25_topk
+    from fink_science_spark.queries_similarity import _BM25_K, q_bm25_topk
 
     rows = q_bm25_topk(spark, SF).collect()
     assert 0 < len(rows) <= _BM25_K
@@ -56,7 +56,7 @@ def test_bm25_scores_positive_and_ranked(spark):
 
 
 def test_fuzzy_match_is_equi_join(spark):
-    from fink_science_spark.queries_ext13 import q_fuzzy_match_names
+    from fink_science_spark.queries_similarity import q_fuzzy_match_names
 
     plan = plan_of(q_fuzzy_match_names(spark, SF))
     assert "CartesianProduct" not in plan
@@ -72,8 +72,8 @@ def test_fuzzy_match_resolves_every_dirty_record_to_its_source(spark):
     candidate, so argmin can't do worse)."""
     from pyspark.sql import functions as F
 
-    from fink_science_spark.queries import _t
-    from fink_science_spark.queries_ext13 import q_fuzzy_match_names
+    from fink_science_spark.tables import _t
+    from fink_science_spark.queries_similarity import q_fuzzy_match_names
 
     out = q_fuzzy_match_names(spark, SF)
     n_dirty = (
@@ -92,8 +92,8 @@ def test_stratified_sample_exact_fractions(spark):
     property Bernoulli sampling only hits in expectation."""
     from pyspark.sql import functions as F
 
-    from fink_science_spark.queries import _t
-    from fink_science_spark.queries_ext13 import _STRAT_FRAC, q_stratified_sample
+    from fink_science_spark.tables import _t
+    from fink_science_spark.queries_analytics import _STRAT_FRAC, q_stratified_sample
 
     totals = {
         (r["lang"], r["source"]): r["n"]
@@ -121,11 +121,8 @@ def test_length_bucket_batches_partition_the_corpus(spark):
     """Batches tile the corpus exactly: sizes ≤ B, Σ n_docs = corpus
     size, padding waste is non-negative, and inside a bucket only the
     LAST batch may be short."""
-    from fink_science_spark.queries import _t
-    from fink_science_spark.queries_ext13 import (
-        _BATCH_SIZE,
-        q_length_bucket_batches,
-    )
+    from fink_science_spark.tables import _t
+    from fink_science_spark.queries_text import _BATCH_SIZE, q_length_bucket_batches
 
     rows = q_length_bucket_batches(spark, SF).collect()
     corpus = _t(spark, SF, "documents").count()
@@ -149,8 +146,8 @@ def test_snapshot_diff_classes_tile_the_key_union(spark):
     planted modulo rules predict each class exactly."""
     from pyspark.sql import functions as F
 
-    from fink_science_spark.queries import _t
-    from fink_science_spark.queries_ext13 import q_snapshot_diff
+    from fink_science_spark.tables import _t
+    from fink_science_spark.queries_relational import q_snapshot_diff
 
     out = {r["cls"]: r for r in q_snapshot_diff(spark, SF).collect()}
     keys = _t(spark, SF, "orders").select(
@@ -182,7 +179,7 @@ def test_snapshot_diff_classes_tile_the_key_union(spark):
 def test_acf_lag_zero_would_be_one_and_lags_bounded(spark):
     """|r_k| ≤ 1 for every lag (Cauchy–Schwarz on the centered series)
     and n_pairs decreases by exactly one per extra lag."""
-    from fink_science_spark.queries_ext13 import _ACF_MAX_LAG, q_acf_lags
+    from fink_science_spark.queries_analytics import _ACF_MAX_LAG, q_acf_lags
 
     rows = {r["lag"]: r for r in q_acf_lags(spark, SF).collect()}
     assert set(rows) == set(range(1, _ACF_MAX_LAG + 1))
@@ -200,8 +197,8 @@ def test_seasonal_decompose_indices_sum_near_zero(spark):
     series scale)."""
     from pyspark.sql import functions as F
 
-    from fink_science_spark.queries import _t
-    from fink_science_spark.queries_ext13 import q_seasonal_decompose
+    from fink_science_spark.tables import _t
+    from fink_science_spark.queries_analytics import q_seasonal_decompose
 
     rows = q_seasonal_decompose(spark, SF).collect()
     assert len(rows) == 7
@@ -226,7 +223,7 @@ def test_rrf_ranks_are_dense_and_scores_descend(spark):
     """Rank columns are top-C list positions (None when the doc missed
     that list); the fused score is non-increasing; the BM25 winner is
     always fused in (1/(60+1) is the largest single contribution)."""
-    from fink_science_spark.queries_ext13 import _RRF_C, q_rrf_fusion
+    from fink_science_spark.queries_similarity import _RRF_C, q_rrf_fusion
 
     rows = q_rrf_fusion(spark, SF).collect()
     assert rows
@@ -243,7 +240,7 @@ def test_rrf_plan_uses_take_ordered_not_global_sort(spark):
     """The top-C lists must come from TakeOrderedAndProject (partial
     per-partition top-C + C-row merge), not a full global Sort of the
     scored corpus."""
-    from fink_science_spark.queries_ext13 import q_rrf_fusion
+    from fink_science_spark.queries_similarity import q_rrf_fusion
 
     plan = plan_of(q_rrf_fusion(spark, SF))
     assert "TakeOrderedAndProject" in plan, plan
@@ -251,7 +248,7 @@ def test_rrf_plan_uses_take_ordered_not_global_sort(spark):
 
 def test_welch_dof_bounds(spark):
     """Welch–Satterthwaite dof lies in [min(na,nb)−1, na+nb−2]."""
-    from fink_science_spark.queries_ext13 import q_ab_welch_ttest
+    from fink_science_spark.queries_analytics import q_ab_welch_ttest
 
     rows = q_ab_welch_ttest(spark, SF).collect()
     assert len(rows) == 1
@@ -260,7 +257,7 @@ def test_welch_dof_bounds(spark):
 
 
 def test_fk_audit_shape_and_consistency(spark):
-    from fink_science_spark.queries_ext13 import q_fk_integrity_audit
+    from fink_science_spark.queries_relational import q_fk_integrity_audit
 
     rows = {r["fk"]: r for r in q_fk_integrity_audit(spark, SF).collect()}
     assert set(rows) == {
@@ -278,8 +275,8 @@ def test_calibration_bins_tile_and_bound(spark):
     """Bins partition the corpus; rates live in [0,1]; the positive
     share equals the 75th-percentile cut construction (≈ 25%, exact up
     to interpolation ties); ECE terms are the weighted |gap|."""
-    from fink_science_spark.queries import _t
-    from fink_science_spark.queries_ext13 import q_calibration_bins
+    from fink_science_spark.tables import _t
+    from fink_science_spark.queries_analytics import q_calibration_bins
 
     rows = q_calibration_bins(spark, SF).collect()
     total = _t(spark, SF, "events").count()
@@ -301,7 +298,7 @@ def test_gap_islands_planted_streaks(spark):
     single day."""
     import datetime
 
-    from fink_science_spark.queries_ext13 import q_gap_islands
+    from fink_science_spark.queries_analytics import q_gap_islands
 
     def ts(day):
         return datetime.datetime(1970, 1, 1) + datetime.timedelta(days=day, hours=5)
@@ -338,7 +335,7 @@ def test_skyline_refine_exact_across_arrow_batch_splits(spark, tmp_path):
     survivors where the true frontier has exactly one."""
     from pyspark.sql import functions as F
 
-    from fink_science_spark.queries_ext12 import q_skyline_frontier
+    from fink_science_spark.queries_analytics import q_skyline_frontier
 
     d = str(tmp_path / "sky_split")
     rows = [(i, 10.0, i + 1) for i in range(12)]  # one price, sizes 1..12

@@ -1,4 +1,4 @@
-"""Edge-case pins for the wave-16 decorrelation suite (queries_ext14).
+"""Edge-case pins for the wave-16 decorrelation suite (queries_relational).
 
 The differential oracle proves parity on the shipped data; these tests
 feed synthetic mini-tables through the SAME registered callables to pin
@@ -25,7 +25,7 @@ _TS = datetime.datetime
 
 
 def test_sole_late_supplier_edges(spark, tmp_path):
-    from fink_science_spark.queries_ext14 import q_sole_late_supplier
+    from fink_science_spark.queries_relational import q_sole_late_supplier
 
     od = _TS(1996, 1, 1)
     on_time = _TS(1996, 2, 1)   # +31d: not late
@@ -65,7 +65,7 @@ def test_sole_late_supplier_edges(spark, tmp_path):
 
 
 def test_top_supplier_keeps_all_maximizers(spark, tmp_path):
-    from fink_science_spark.queries_ext14 import q_top_supplier
+    from fink_science_spark.queries_relational import q_top_supplier
 
     ship = _TS(1996, 2, 1)
     _write(
@@ -92,7 +92,7 @@ def test_top_supplier_keeps_all_maximizers(spark, tmp_path):
 
 
 def test_custorder_distribution_zero_bucket(spark, tmp_path):
-    from fink_science_spark.queries_ext14 import q_custorder_distribution
+    from fink_science_spark.queries_relational import q_custorder_distribution
 
     _write(
         spark, tmp_path, "customer",
@@ -116,7 +116,7 @@ def test_custorder_distribution_zero_bucket(spark, tmp_path):
 
 
 def test_dormant_customers_strict_threshold(spark, tmp_path):
-    from fink_science_spark.queries_ext14 import (
+    from fink_science_spark.queries_relational import (
         _DORMANT_NATIONS,
         q_dormant_customers,
     )
@@ -144,7 +144,7 @@ def test_dormant_customers_strict_threshold(spark, tmp_path):
 
 
 def test_important_parts_strict_2x_average(spark, tmp_path):
-    from fink_science_spark.queries_ext14 import q_important_parts
+    from fink_science_spark.queries_relational import q_important_parts
 
     _write(
         spark, tmp_path, "region",
@@ -174,7 +174,7 @@ def test_important_parts_strict_2x_average(spark, tmp_path):
 
 
 def test_important_parts_above_threshold(spark, tmp_path):
-    from fink_science_spark.queries_ext14 import q_important_parts
+    from fink_science_spark.queries_relational import q_important_parts
 
     _write(
         spark, tmp_path, "region",
@@ -204,7 +204,7 @@ def test_important_parts_above_threshold(spark, tmp_path):
 
 
 def test_min_cost_supplier_keeps_cost_ties(spark, tmp_path):
-    from fink_science_spark.queries_ext14 import q_min_cost_supplier
+    from fink_science_spark.queries_relational import q_min_cost_supplier
 
     _write(
         spark, tmp_path, "region",
